@@ -436,6 +436,7 @@ def _emit(out: dict) -> None:
     try:
         with open(os.path.join(here, detail_name), "w") as f:
             json.dump(out, f, indent=1)
+            f.write("\n")
         out_detail = detail_name
     except OSError:  # pragma: no cover — read-only checkout
         out_detail = None

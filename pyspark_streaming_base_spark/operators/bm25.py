@@ -303,31 +303,17 @@ def load_bm25_index(
     """The LIVE ``(postings, doclens)`` view: tombstoned docs removed
     from both tables, so every derived statistic (N, avgdl, df) reflects
     the post-delete corpus. All probe entry points read through here.
+    Both tables share one tombstone read, and the compaction-ratio check
+    runs once against doclens (one row per doc, like the tombstones)."""
+    from pyspark_streaming_base_spark.operators.tombstones import load_live_view
 
-    r14: the three resolutions (two tables + tombstones) are independent
-    driver-side metadata I/O and run concurrently; the tombstone frame
-    is read ONCE and shared by both anti-joins, and the compaction-ratio
-    footer check (one ratio — both tables share the doclens-row basis)
-    fires once instead of per table."""
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        apply_tombstones,
-        read_live,
-        read_tombstones,
-        resolve_concurrently,
+    postings, doclens = load_live_view(
+        spark,
+        f"{path}/tombstones",
+        id_col,
+        live=[f"{path}/postings", f"{path}/doclens"],
+        ratio_basis=f"{path}/doclens",
     )
-
-    tp = f"{path}/tombstones"
-    postings_raw, doclens_raw, tomb = resolve_concurrently(
-        lambda: read_live(spark, f"{path}/postings"),
-        lambda: read_live(spark, f"{path}/doclens"),
-        lambda: read_tombstones(spark, tp),
-    )
-    postings = apply_tombstones(
-        spark, tp, postings_raw, id_col,
-        live_path=f"{path}/doclens",  # ratio vs one-row-per-doc, like tombstones
-        tomb=tomb,
-    )
-    doclens = apply_tombstones(spark, tp, doclens_raw, id_col, tomb=tomb)
     return postings, doclens
 
 

@@ -52,13 +52,10 @@ from pyspark.sql import functions as F
 
 from pyspark_streaming_base_spark.functions.textops import tokens, word_shingles
 from pyspark_streaming_base_spark.operators.tombstones import (
-    _READ_TOMB,
     append_live,
-    apply_tombstones,
     clear_tombstones,
+    load_live_view,
     read_live,
-    read_tombstones,
-    resolve_concurrently,
     swap_in,
     write_tombstones,
 )
@@ -173,27 +170,27 @@ def append_containment_index(
     append_live(_postings(sets), f"{path}/postings", partition_by=("slice",))
 
 
-def _live_sets(spark: SparkSession, path: str, raw=None, tomb=_READ_TOMB) -> DataFrame:
-    return apply_tombstones(
+def _load(spark: SparkSession, path: str) -> list:
+    """``[live sets, live postings, df]`` through the shared loader. The
+    compaction-ratio check compares against the one-row-per-doc sets
+    table (postings rows inflate both sides of the ratio identically
+    only when doc sizes are even)."""
+    return load_live_view(
         spark,
         f"{path}/tombstones",
-        raw if raw is not None else read_live(spark, f"{path}/sets"),
         "doc_id",
-        live_path=f"{path}/sets",
-        tomb=tomb,
+        live=[f"{path}/sets", f"{path}/postings"],
+        frozen=[f"{path}/df"],
+        ratio_basis=f"{path}/sets",
     )
 
 
-def _live_postings(spark: SparkSession, path: str, raw=None, tomb=_READ_TOMB) -> DataFrame:
-    return apply_tombstones(
-        spark,
-        f"{path}/tombstones",
-        raw if raw is not None else read_live(spark, f"{path}/postings"),
-        "doc_id",
-        # ratio vs the one-row-per-doc table (postings rows inflate both
-        # sides of the ratio identically only when doc sizes are even)
-        live_path=f"{path}/sets",
-        tomb=tomb,
+def _probe_side(sets: DataFrame) -> DataFrame:
+    return sets.select(
+        F.col("doc_id").alias("query_id"),
+        F.col("lang").alias("q_lang"),
+        F.col("shingles").alias("q_shingles"),
+        F.col("nt").alias("nt_a"),
     )
 
 
@@ -212,13 +209,8 @@ def query_containment_index(
     shingled once; the corpus contributes postings + sets. Same output
     contract as q156: (doc_small, doc_big, n_common, n_small,
     containment), same-lang, self-pairs excluded."""
-    probe = shingle_sets(probe_docs, id_col, text_col, lang_col).select(
-        F.col("doc_id").alias("query_id"),
-        F.col("lang").alias("q_lang"),
-        F.col("shingles").alias("q_shingles"),
-        F.col("nt").alias("nt_a"),
-    )
-    return _probe(spark, path, probe, tau_num, tau_den)
+    probe = _probe_side(shingle_sets(probe_docs, id_col, text_col, lang_col))
+    return _probe(*_load(spark, path), probe, tau_num, tau_den)
 
 
 def containment_pairs_from_index(
@@ -226,18 +218,14 @@ def containment_pairs_from_index(
 ) -> DataFrame:
     """q156 over the index's OWN corpus — the repeated-crawl entry point:
     no re-shingling anywhere (probe side = the live sets table)."""
-    probe = _live_sets(spark, path).select(
-        F.col("doc_id").alias("query_id"),
-        F.col("lang").alias("q_lang"),
-        F.col("shingles").alias("q_shingles"),
-        F.col("nt").alias("nt_a"),
-    )
-    return _probe(spark, path, probe, tau_num, tau_den)
+    sets, posts, df_tbl = _load(spark, path)
+    return _probe(sets, posts, df_tbl, _probe_side(sets), tau_num, tau_den)
 
 
 def _probe(
-    spark: SparkSession,
-    path: str,
+    sets: DataFrame,
+    posts: DataFrame,
+    df_tbl: DataFrame,
     probe: DataFrame,
     tau_num: int,
     tau_den: int,
@@ -251,16 +239,6 @@ def _probe(
         F.col("nt_a")
         - F.floor((F.col("nt_a") * F.lit(tau_num) + F.lit(tau_den - 1)) / F.lit(tau_den))
         + F.lit(1)
-    )
-    # r14: the four index-table resolutions (df, postings, sets,
-    # tombstones) are independent driver-side metadata I/O — run them
-    # concurrently and share ONE tombstone read across both live views
-    # (see tombstones.resolve_concurrently)
-    df_tbl, posts_raw, sets_raw, tomb = resolve_concurrently(
-        lambda: read_live(spark, f"{path}/df"),
-        lambda: read_live(spark, f"{path}/postings"),
-        lambda: read_live(spark, f"{path}/sets"),
-        lambda: read_tombstones(spark, f"{path}/tombstones"),
     )
     pref = (
         probe.select(
@@ -287,7 +265,6 @@ def _probe(
         .filter(F.col("_pos") <= F.col("_k"))
         .select("query_id", "q_lang", "nt_a", "sh")
     )
-    posts = _live_postings(spark, path, raw=posts_raw, tomb=tomb)
     # candidate generation: prefix equi-join on (sh, lang) with the
     # integer size gate. `slice` rides on the posting row so the gate
     # `den·2^(slice+1) > num·nt_a` (slice upper bound vs the implied
@@ -306,7 +283,7 @@ def _probe(
     )
     # verify: re-attach both shingle sets by id (keys-only until here)
     qs = probe.select("query_id", "q_shingles", "nt_a")
-    bs = _live_sets(spark, path, raw=sets_raw, tomb=tomb).select(
+    bs = sets.select(
         F.col("doc_id").alias("index_id"), F.col("shingles").alias("b_shingles")
     )
     n_common = F.size(F.array_intersect(F.col("q_shingles"), F.col("b_shingles")))
@@ -351,8 +328,7 @@ def compact_containment_index(spark: SparkSession, path: str) -> None:
     """Fold tombstones into sets + postings (generation-pointer staged
     swaps, slice layout preserved), rebuild the df ordering table from
     the live postings, clear the tombstone set."""
-    live_sets = _live_sets(spark, path)
-    live_posts = _live_postings(spark, path)
+    live_sets, live_posts, _df = _load(spark, path)
     swap_in(f"{path}/sets", live_sets, partition_by=("slice",))
     swap_in(f"{path}/postings", live_posts, partition_by=("slice",))
     # postings now resolves to the compacted generation — rebuild df

@@ -131,25 +131,22 @@ def query_ivf_index(
 ) -> DataFrame:
     """(qid, vec_id, sim_r, rnk ≤ top_k) for a query batch (qid, qvec).
     Reads the LIVE assignments (tombstoned vec_ids excluded)."""
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        apply_tombstones,
-        read_live,
-        resolve_concurrently,
-    )
+    assigned, centroids = _load_ivf_index(spark, path)
+    return ivf_search(queries, centroids, assigned, nprobe, top_k)
 
-    # r14: independent driver-side resolutions run concurrently
-    centroids, assigned_raw = resolve_concurrently(
-        lambda: spark.read.parquet(f"{path}/centroids"),
-        lambda: read_live(spark, f"{path}/assignments"),
-    )
-    assigned = apply_tombstones(
+
+def _load_ivf_index(spark: SparkSession, path: str) -> list:
+    """``[live assignments, centroids]`` for the probe paths."""
+    from pyspark_streaming_base_spark.operators.tombstones import load_live_view
+
+    return load_live_view(
         spark,
         f"{path}/tombstones",
-        assigned_raw,
         "vec_id",
-        live_path=f"{path}/assignments",
+        live=[f"{path}/assignments"],
+        frozen=[f"{path}/centroids"],
+        ratio_basis=f"{path}/assignments",
     )
-    return ivf_search(queries, centroids, assigned, nprobe, top_k)
 
 
 def delete_from_ivf_index(
@@ -179,17 +176,13 @@ def compact_ivf_index(spark: SparkSession, path: str) -> None:
     """Fold tombstones into the assignments table (staged-swap) and
     clear them."""
     from pyspark_streaming_base_spark.operators.tombstones import (
-        apply_tombstones,
         clear_tombstones,
-        read_live,
+        load_live_view,
         swap_in,
     )
 
-    live = apply_tombstones(
-        spark,
-        f"{path}/tombstones",
-        read_live(spark, f"{path}/assignments"),
-        "vec_id",
+    (live,) = load_live_view(
+        spark, f"{path}/tombstones", "vec_id", live=[f"{path}/assignments"]
     )
     swap_in(f"{path}/assignments", live)
     clear_tombstones(f"{path}/tombstones")
@@ -227,29 +220,10 @@ def tune_nprobe(
     live vectors, so recall < 1 there means the floor is unreachable for
     this (k, corpus) and the caller should question the floor or k).
     """
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        apply_tombstones,
-        read_live,
-    )
-
     if not 0.0 < recall_floor <= 1.0:
         raise ValueError(f"recall_floor must be in (0, 1], got {recall_floor}")
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        resolve_concurrently,
-    )
-
-    centroids, live_raw = resolve_concurrently(
-        lambda: spark.read.parquet(f"{path}/centroids"),
-        lambda: read_live(spark, f"{path}/assignments"),
-    )
+    live, centroids = _load_ivf_index(spark, path)
     n_cells = centroids.count()
-    live = apply_tombstones(
-        spark,
-        f"{path}/tombstones",
-        live_raw,
-        "vec_id",
-        live_path=f"{path}/assignments",
-    )
 
     # r14 (guide §1.2 "the distributed algorithm first"): the old sweep
     # ran a FULL probe per schedule step — ≤ log₂(cells)+1 serial

@@ -211,15 +211,12 @@ def load_minhash_index(
     """The LIVE signature table: tombstoned ids excluded. Probe and
     rebuild paths read through here so deleted docs can neither emit nor
     receive candidates."""
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        apply_tombstones,
-        read_live,
-    )
+    from pyspark_streaming_base_spark.operators.tombstones import load_live_view
 
-    return apply_tombstones(
-        spark, f"{path}.tombstones", read_live(spark, path), id_col,
-        live_path=path,
+    (live,) = load_live_view(
+        spark, f"{path}.tombstones", id_col, live=[path], ratio_basis=path
     )
+    return live
 
 
 def compact_minhash_index(

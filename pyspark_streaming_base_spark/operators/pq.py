@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from pyspark_streaming_base_spark.functions.vectorops import l2sq
+from pyspark_streaming_base_spark.operators.spread import spread
 
 __all__ = [
     "pq_subvectors",
@@ -54,19 +55,6 @@ __all__ = [
     "build_pq_index",
     "query_pq_index",
 ]
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Scale-adaptive parallelism for the fused single-pass encode: the
-    heavy per-row quantizer arithmetic runs wherever the SCAN's splits
-    put it, so an input with fewer splits than cores (the fixture is ONE
-    ~17 MB parquet file) would serialize the whole pass through one
-    task. r14: delegates to the ONE shared definition in
-    ``operators/spread.py`` (hoisted per the r13 advice), keyed on
-    vec_id."""
-    from pyspark_streaming_base_spark.operators.spread import spread
-
-    return spread(df, "vec_id")
 
 
 def pq_subvectors(emb: DataFrame, m: int, id_col: str = "vec_id", vec_col: str = "vec") -> DataFrame:
@@ -682,7 +670,7 @@ def build_pq_index(
     # recomputed against the corpus.
     cent_saved = spark.read.parquet(f"{path}/centroids")
     (
-        ivf_assign(_spread(emb), cent_saved)
+        ivf_assign(spread(emb, "vec_id"), cent_saved)
         .join(F.broadcast(_cb_entries_row(cb_saved)))
         .select(
             "vec_id",
@@ -721,7 +709,7 @@ def append_pq_index(spark, path: str, new_emb: DataFrame, m: int) -> None:
     # same fused single-pass shape as build_pq_index (r13): assignment
     # and encoding are projections, the batch is scanned once
     append_live(
-        ivf_assign(_spread(new_emb), centroids)
+        ivf_assign(spread(new_emb, "vec_id"), centroids)
         .join(F.broadcast(_cb_entries_row(cb)))
         .select(
             "vec_id",
@@ -748,23 +736,15 @@ def query_pq_index(
     full-precision vectors for the re-rank) comes from the ONE
     pre-joined ``index`` table; the source corpus is never read.
     """
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        apply_tombstones,
-        read_live,
-        resolve_concurrently,
-    )
+    from pyspark_streaming_base_spark.operators.tombstones import load_live_view
 
-    # r14: the three table resolutions are independent driver-side
-    # metadata I/O — run them concurrently (measured ~100 ms each
-    # serial; see resolve_concurrently)
-    codebooks, centroids, index_raw = resolve_concurrently(
-        lambda: spark.read.parquet(f"{path}/codebooks"),
-        lambda: spark.read.parquet(f"{path}/centroids"),
-        lambda: read_live(spark, f"{path}/index"),
-    )
-    index = apply_tombstones(
-        spark, f"{path}/tombstones", index_raw,
-        "vec_id", live_path=f"{path}/index",
+    index, codebooks, centroids = load_live_view(
+        spark,
+        f"{path}/tombstones",
+        "vec_id",
+        live=[f"{path}/index"],
+        frozen=[f"{path}/codebooks", f"{path}/centroids"],
+        ratio_basis=f"{path}/index",
     )
 
     probes = _quantizer_plan(queries, centroids, codebooks, m, nprobe)
@@ -807,14 +787,11 @@ def compact_pq_index(spark, path: str) -> None:
     """Fold tombstones into the ``index`` table (staged-swap), clear
     them."""
     from pyspark_streaming_base_spark.operators.tombstones import (
-        apply_tombstones,
         clear_tombstones,
-        read_live,
+        load_live_view,
         swap_in,
     )
 
-    live = apply_tombstones(
-        spark, f"{path}/tombstones", read_live(spark, f"{path}/index"), "vec_id"
-    )
+    (live,) = load_live_view(spark, f"{path}/tombstones", "vec_id", live=[f"{path}/index"])
     swap_in(f"{path}/index", live)
     clear_tombstones(f"{path}/tombstones")

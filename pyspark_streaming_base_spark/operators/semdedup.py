@@ -359,15 +359,13 @@ def _live_assignments(spark: SparkSession, path: str) -> DataFrame:
     """Assignments minus tombstoned vec_ids — every policy/merge path
     reads through here so deleted vectors neither block nor get
     removed."""
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        apply_tombstones,
-        read_live,
-    )
+    from pyspark_streaming_base_spark.operators.tombstones import load_live_view
 
-    return apply_tombstones(
-        spark, f"{path}/tombstones", read_live(spark, f"{path}/assignments"),
-        "vec_id", live_path=f"{path}/assignments",
+    live = f"{path}/assignments"
+    (assignments,) = load_live_view(
+        spark, f"{path}/tombstones", "vec_id", live=[live], ratio_basis=live
     )
+    return assignments
 
 
 def delete_from_semdedup_index(

@@ -1,8 +1,6 @@
 """Scale-adaptive parallelism for expensive per-row stages over a
 small-split input — the ONE definition of the conditional-repartition
-pattern (r14, hoisted per the r13 advice: ``queries/_tables.spread`` and
-``operators/pq.py::_spread`` were two copies against the
-one-definition-per-helper invariant).
+pattern; queries and operators import it from here directly.
 
 Rationale (r13, guide §2.5 input skew): the fixture tables are single
 parquet files with one row group, so every scan-rooted stage otherwise

@@ -33,22 +33,19 @@ One documented exception: the FIRST swap over a legacy real-directory
 layout (an index built before this scheme) must rename that directory
 aside before the flip — a one-time, two-rename migration window.
 
-Two POINTER MODES share the one lifecycle (``set_pointer_mode``):
+The pointer is a tiny TEXT FILE naming the current generation
+directory, published with write-temp + atomic replace (the
+``sinks/manifest_parquet.py`` commit idea applied to a pointer). That is
+the object-store shape: S3/GCS-style stores have no symlinks or atomic
+renames of directories, but a single-key overwrite is exactly what their
+APIs give you. ``snapshot_path`` still resolves a symlink pointer (the
+layout earlier versions published), so such an index keeps reading and
+its next ``swap_in`` replaces the link with a pointer file.
 
-* ``symlink`` — the pointer is an ``os.symlink`` flipped with one atomic
-  ``os.replace``; the local-FS default.
-* ``manifest`` — the pointer is a tiny TEXT FILE naming the current
-  generation directory, published with write-temp + atomic replace (the
-  ``sinks/manifest_parquet.py`` commit idea applied to a pointer). This
-  is the object-store shape: S3/GCS-style stores have no symlinks, but
-  a single-key overwrite-with-replace (or put-if-absent of versioned
-  manifests) is exactly what their APIs give you.
-
-Mode is WRITE-time only: ``snapshot_path`` resolves either pointer kind
-regardless of the active mode, so an index can migrate between modes one
-swap at a time and concurrent readers never care. ``auto`` (the default)
-probes symlink support once and falls back to manifest files where
-symlinks don't exist.
+Probes, loads and compactions open an index through ONE loader,
+``load_live_view``: live tables, frozen tables and the tombstone set
+resolve concurrently, tombstones are read once per call and anti-joined
+into every live table, and the compaction-ratio check runs at most once.
 """
 
 from __future__ import annotations
@@ -56,10 +53,10 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
 import uuid
 import warnings
-from typing import Callable, Optional
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, Optional, Sequence
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -84,44 +81,6 @@ GENERATIONS_RETAINED = 2
 #: First line of a manifest pointer file — identifies the file as a
 #: generation pointer (vs any stray file at the live path).
 _POINTER_MAGIC = "spark-graft-generation-pointer"
-
-_pointer_mode: str = "auto"
-_symlink_probe: Optional[bool] = None
-
-
-def set_pointer_mode(mode: str) -> str:
-    """Select how ``swap_in`` publishes the generation pointer:
-    ``symlink`` (local-FS default), ``manifest`` (pointer FILE — the
-    object-store shape), or ``auto`` (probe symlink support once, fall
-    back to manifest). Returns the previous mode so tests/fixtures can
-    restore it. Read-side resolution is mode-agnostic."""
-    global _pointer_mode
-    if mode not in ("auto", "symlink", "manifest"):
-        raise ValueError(f"unknown pointer mode: {mode!r}")
-    prev, _pointer_mode = _pointer_mode, mode
-    return prev
-
-
-def _symlinks_available() -> bool:
-    """One cached probe: can this filesystem create symlinks at all?
-    (Windows without privileges, some fuse/object-store mounts: no.)"""
-    global _symlink_probe
-    if _symlink_probe is None:
-        d = tempfile.mkdtemp(prefix="ptrprobe_")
-        try:
-            os.symlink(d, os.path.join(d, "ln"))
-            _symlink_probe = True
-        except OSError:  # pragma: no cover — exercised on symlink-less FS
-            _symlink_probe = False
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
-    return _symlink_probe
-
-
-def _effective_pointer_mode() -> str:
-    if _pointer_mode != "auto":
-        return _pointer_mode
-    return "symlink" if _symlinks_available() else "manifest"
 
 
 def _read_pointer_file(live_path: str) -> str:
@@ -162,21 +121,6 @@ def write_tombstones(
     ids.select(id_col).write.mode("append").parquet(tomb_path)
 
 
-def resolve_concurrently(*thunks):
-    """Run independent driver-side table resolutions (``spark.read``
-    schema/footer reads, pointer checks) in parallel threads and return
-    their results in order — guide §2.6 applied to the DRIVER: a probe
-    that opens N index tables serially pays N × ~100 ms of blocking
-    metadata I/O before any job runs (r14, measured: 4 schema reads
-    0.52 s serial → 0.18 s concurrent). Pure reads only — no actions,
-    no thread-local job-group state is touched."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
-        futures = [ex.submit(t) for t in thunks]
-        return [f.result() for f in futures]
-
-
 def read_tombstones(spark: SparkSession, tomb_path: str) -> Optional[DataFrame]:
     """The distinct tombstoned ids, or None when nothing was ever
     deleted (the common fresh-index case — avoids planning a no-op
@@ -200,7 +144,21 @@ def read_tombstones(spark: SparkSession, tomb_path: str) -> Optional[DataFrame]:
         raise
 
 
-_READ_TOMB = object()  # sentinel: apply_tombstones reads the path itself
+def _warn_past_ratio(tomb_path: str, live_path: str, warn_ratio: float) -> None:
+    """Fire ``TombstoneCompactionNeeded`` once the tombstone-to-live row
+    ratio (parquet footers — driver-side metadata only, no job) reaches
+    ``warn_ratio``, so an operator who never schedules compaction hears
+    about the silently-degrading probe instead of paying for it
+    forever. Attributed to the caller of the public entry point."""
+    ratio = tombstone_ratio(tomb_path, live_path)
+    if ratio is not None and ratio >= warn_ratio:
+        warnings.warn(
+            f"tombstones at {tomb_path} are {ratio:.0%} of the live "
+            f"rows at {live_path} (threshold {warn_ratio:.0%}); "
+            "schedule compaction",
+            TombstoneCompactionNeeded,
+            stacklevel=3,
+        )
 
 
 def apply_tombstones(
@@ -210,38 +168,55 @@ def apply_tombstones(
     id_col: str,
     live_path: Optional[str] = None,
     warn_ratio: Optional[float] = COMPACT_RATIO,
-    tomb=_READ_TOMB,
 ) -> DataFrame:
     """``df`` minus tombstoned ids — the LIVE view. One anti-join; the
     tombstone side is a bare id list, broadcast by AQE while it stays
     small (compaction is the remedy when it doesn't). When the caller
     passes ``live_path`` (the physical table backing ``df``), the
-    tombstone-to-live row ratio is checked from parquet footers —
-    driver-side metadata only, no job — and a
-    ``TombstoneCompactionNeeded`` warning fires past ``warn_ratio`` so
-    an operator who never schedules compaction hears about the
-    silently-degrading probe instead of paying for it forever.
-
-    ``tomb`` (r14): a loader resolving several tables of one index may
-    pre-read the tombstone frame once (``read_tombstones``) — possibly
-    concurrently with the table reads (:func:`resolve_concurrently`) —
-    and pass it (or its None) here instead of paying a fresh read per
-    table."""
-    if tomb is _READ_TOMB:
-        tomb = read_tombstones(spark, tomb_path)
+    compaction-ratio check runs against it (see ``_warn_past_ratio``).
+    Index families open their tables through ``load_live_view``
+    instead, which shares one tombstone read across several tables."""
+    tomb = read_tombstones(spark, tomb_path)
     if tomb is None:
         return df
     if live_path is not None and warn_ratio is not None:
-        ratio = tombstone_ratio(tomb_path, live_path)
-        if ratio is not None and ratio >= warn_ratio:
-            warnings.warn(
-                f"tombstones at {tomb_path} are {ratio:.0%} of the live "
-                f"rows at {live_path} (threshold {warn_ratio:.0%}); "
-                "schedule compaction",
-                TombstoneCompactionNeeded,
-                stacklevel=2,
-            )
+        _warn_past_ratio(tomb_path, live_path, warn_ratio)
     return df.join(tomb.select(id_col), id_col, "anti")
+
+
+def load_live_view(
+    spark: SparkSession,
+    tomb_path: str,
+    id_col: str,
+    live: Sequence[str],
+    frozen: Sequence[str] = (),
+    ratio_basis: Optional[str] = None,
+) -> list:
+    """Open one persisted index: every ``live`` table minus the
+    tombstoned ids, then every ``frozen`` table (centroids, codebooks,
+    ordering stats — never tombstoned) as read, in the order given. The
+    one entry point for every index probe, load and compaction.
+
+    All tables resolve through ``read_live`` and the tombstone set
+    through ``read_tombstones``, concurrently: each is independent
+    driver-side metadata I/O (schema and footer reads), which opened
+    serially would add up before any job runs. Pure reads only — no
+    actions, no thread-local job-group state. The tombstone set is read ONCE and
+    shared by every anti-join. ``ratio_basis`` names the one-row-per-id
+    table the compaction-ratio check compares against; it runs at most
+    once per call, and only when tombstones exist. None skips it."""
+    paths = [*live, *frozen]
+    with ThreadPoolExecutor(max_workers=len(paths) + 1) as ex:
+        tomb_f = ex.submit(read_tombstones, spark, tomb_path)
+        tables = list(ex.map(lambda p: read_live(spark, p), paths))
+        tomb = tomb_f.result()
+    if tomb is None:
+        return tables
+    if ratio_basis is not None:
+        _warn_past_ratio(tomb_path, ratio_basis, COMPACT_RATIO)
+    ids = tomb.select(id_col)
+    n = len(live)
+    return [t.join(ids, id_col, "anti") for t in tables[:n]] + tables[n:]
 
 
 def _parquet_rows(path: str) -> Optional[int]:
@@ -292,9 +267,9 @@ def maybe_compact(
 
 def snapshot_path(live_path: str) -> str:
     """Resolve the generation POINTER to the immutable snapshot
-    directory it names — MODE-AGNOSTIC (a symlink resolves via
-    realpath, a manifest pointer file via its recorded target, a plain
-    directory is its own snapshot). Probes must read the resolved path,
+    directory it names (a pointer file via its recorded target, a
+    plain directory is its own snapshot, and a symlink pointer from an
+    earlier version via realpath). Probes must read the resolved path,
     not the pointer: file paths listed through the pointer would dangle
     if a compaction flipped it mid-read, while the resolved generation
     dir is never mutated and survives at least ``GENERATIONS_RETAINED``
@@ -317,10 +292,9 @@ def append_live(df: DataFrame, live_path: str, partition_by=()) -> None:
     """Parquet-append a batch to the CURRENT generation behind
     ``live_path`` — the one WRITE entry point for every index family's
     O(batch) append, mirroring ``read_live``. Resolving the pointer
-    first is what makes appends work in manifest mode (a raw
-    ``.parquet(live_path)`` would try to write into the pointer FILE);
-    in symlink mode it lands in the same place writing through the link
-    would. Single-writer maintenance contract: an append racing a
+    first is what makes appends work at all (a raw
+    ``.parquet(live_path)`` would try to write into the pointer FILE).
+    Single-writer maintenance contract: an append racing a
     compaction flip may land in the pre-flip generation — same as the
     family-wide contract that appends and compactions don't race."""
     writer = df.write.mode("append")
@@ -366,9 +340,10 @@ def _write_history(live_path: str, hist: list) -> None:
 
 
 def _publish_pointer(live_path: str, gen: str) -> Optional[str]:
-    """Atomically point ``live_path`` at ``gen`` (mode-selected pointer
-    kind), migrating a legacy real-directory live table aside first.
-    Returns the pre-flip snapshot path (None for a fresh live path)."""
+    """Atomically point ``live_path`` at ``gen`` with a pointer file
+    (replacing a symlink pointer from an earlier version), migrating a
+    legacy real-directory live table aside first. Returns the pre-flip
+    snapshot path (None for a fresh live path)."""
     prev: Optional[str] = (
         os.path.realpath(snapshot_path(live_path))
         if os.path.lexists(live_path)
@@ -382,11 +357,8 @@ def _publish_pointer(live_path: str, gen: str) -> Optional[str]:
         prev = os.path.realpath(legacy)
 
     tmp = f"{live_path}.ptr.{uuid.uuid4().hex}"
-    if _effective_pointer_mode() == "symlink":
-        os.symlink(os.path.abspath(gen), tmp)
-    else:
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(f"{_POINTER_MAGIC}\n{os.path.abspath(gen)}\n")
+    with open(tmp, "w", encoding="utf-8") as f:
+        f.write(f"{_POINTER_MAGIC}\n{os.path.abspath(gen)}\n")
     try:
         os.replace(tmp, live_path)
     except BaseException:
@@ -400,9 +372,9 @@ def swap_in(live_path: str, staged_df: DataFrame, partition_by=()) -> None:
     """Staged-swap rewrite of one physical table, safe for concurrent
     readers: write the new snapshot to a fresh generation directory
     ``<live>.gen.<id>``, then flip the ``live_path`` pointer to it with
-    one atomic ``os.replace`` (symlink or manifest file —
-    ``set_pointer_mode``). A reader resolving the pointer sees the old
-    snapshot or the new one, never a missing directory.
+    one atomic ``os.replace`` of a pointer file. A reader resolving the
+    pointer sees the old snapshot or the new one, never a missing
+    directory.
 
     Retention: the newest ``GENERATIONS_RETAINED`` PUBLISHED previous
     generations survive each swap (recorded in the ``.gen.history``
@@ -494,8 +466,9 @@ def reset_live(live_path: str) -> None:
     """Tear down any generation pointer, retained generations and
     history sidecar at ``live_path`` so a fresh BUILD writes a plain
     directory. ``build_*_index`` call this before their overwrite
-    writes: a parquet overwrite THROUGH a pointer would mutate an
-    immutable snapshot (symlink mode) or fail outright (manifest mode).
+    writes: a parquet overwrite THROUGH a pointer would fail outright
+    (or, through an earlier version's symlink, mutate an immutable
+    snapshot).
     A build defines the corpus — it is not a reader-safe operation, so
     tearing the pointer down is in contract (rewrites that must stay
     reader-safe go through ``swap_in``)."""

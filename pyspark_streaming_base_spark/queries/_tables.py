@@ -68,13 +68,3 @@ def dim(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read a dimension table with a broadcast hint for shuffle-free joins."""
     return F.broadcast(t(spark, sf_dir, name))
 
-
-def spread(df: DataFrame, *cols: str) -> DataFrame:
-    """Scale-adaptive parallelism for expensive per-row stages (tokenize/
-    shingle/decode) over a small-split input. r14: delegates to the ONE
-    shared definition in ``operators/spread.py`` (hoisted per the r13
-    advice — this and ``operators/pq.py`` carried two copies); see that
-    module's docstring for the no-op-at-scale rationale."""
-    from pyspark_streaming_base_spark.operators.spread import spread as _s
-
-    return _s(df, *cols)

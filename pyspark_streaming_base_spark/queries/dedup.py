@@ -24,9 +24,10 @@ from pyspark_streaming_base_spark.operators.fuzzyjoin import (
     hamming_self_join,
     levenshtein_self_join,
 )
+from pyspark_streaming_base_spark.operators.spread import spread
 from pyspark_streaming_base_spark.queries import query
 from pyspark_streaming_base_spark.queries._exact import dround
-from pyspark_streaming_base_spark.queries._tables import spread, t
+from pyspark_streaming_base_spark.queries._tables import t
 
 
 @query(
@@ -139,7 +140,7 @@ def q41_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §2.5 input skew): the fixture table is ONE parquet
     # split, so the 16-permutation signature computation ran as a single
     # task per join side; spread() parallelizes it and is a no-op at
-    # corpus scale (see _tables.spread). The same spread frame feeds the
+    # corpus scale (see operators/spread.py). The same spread frame feeds the
     # verify sides below so their exchanges map in parallel too.
     docs = spread(t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
     stacked = minhash_bands(docs)
@@ -618,7 +619,7 @@ def q107_dup_span_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = _tokens(F.col("text"))
     # r13 (guide §2.5 input skew): spread the single-split fixture scan
     # — the per-doc window hashing (~size(tk) md5s per doc) otherwise
-    # runs in ONE task; no-op at corpus scale (see _tables.spread).
+    # runs in ONE task; no-op at corpus scale (see operators/spread.py).
     d = (
         spread(t(spark, sf_dir, "documents"), "doc_id")
         .select("doc_id", toks.alias("tk"))

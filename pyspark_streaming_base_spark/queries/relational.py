@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyspark_streaming_base_spark.operators.spread import spread
 from pyspark_streaming_base_spark.queries import query
 from pyspark_streaming_base_spark.queries._exact import (
     dround,
@@ -27,7 +28,7 @@ from pyspark_streaming_base_spark.queries._exact import (
     sql_dsum,
     unscale,
 )
-from pyspark_streaming_base_spark.queries._tables import dim, spread, t
+from pyspark_streaming_base_spark.queries._tables import dim, t
 
 
 # ---------------------------------------------------------------------------
@@ -70,7 +71,7 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §2.5 input skew): the fixture fact table is one parquet
     # row group, so scan + the 8-aggregate partial evaluation ran in ONE
     # task; spread() moves the aggregate work off the serial scan task
-    # and is a no-op at corpus scale (see _tables.spread). Key on
+    # and is a no-op at corpus scale (see operators/spread.py). Key on
     # l_shipdate — a column Q1 already reads for the filter — so the
     # spread forces no extra column through scan+exchange (the original
     # l_orderkey key un-pruned an 8-byte column Q1 never references;

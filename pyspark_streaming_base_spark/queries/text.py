@@ -15,8 +15,9 @@ from pyspark_streaming_base_spark.functions.textops import tokens as _tokens
 from pyspark_streaming_base_spark.functions.textops import (
     word_shingles as _shingles,
 )
+from pyspark_streaming_base_spark.operators.spread import spread
 from pyspark_streaming_base_spark.queries import query
-from pyspark_streaming_base_spark.queries._tables import spread, t
+from pyspark_streaming_base_spark.queries._tables import t
 
 #: Tiny per-language stopword lists for the heuristic language-ID operator.
 _STOPWORDS = {
@@ -983,7 +984,7 @@ def q87_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r13 (guide §2.5 input skew): spread the single-split fixture scan
     # so the per-branch shingle computation parallelizes; no-op at
-    # corpus scale (see _tables.spread).
+    # corpus scale (see operators/spread.py).
     d = spread(t(spark, sf_dir, "documents"), "doc_id").select(
         "doc_id",
         "lang",
@@ -1225,7 +1226,7 @@ def q121_contamination_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r13 (guide §2.5 input skew): spread the single-split fixture scan
     # so the per-branch shingle computation parallelizes; no-op at
-    # corpus scale (see _tables.spread).
+    # corpus scale (see operators/spread.py).
     d = spread(t(spark, sf_dir, "documents"), "doc_id").select(
         "doc_id",
         "lang",
@@ -1430,7 +1431,7 @@ def q136_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §2.5 input skew / §1.2): the fixture table is ONE
     # parquet split, so each tokenize-rooted stage ran as a single task;
     # spread() parallelizes them across cores and is a no-op at corpus
-    # scale (see _tables.spread). The scorer's repeated subtrees stay
+    # scale (see operators/spread.py). The scorer's repeated subtrees stay
     # UNpersisted deliberately: each is a pruned single-pass scan and a
     # 1-partition persist was measured to SERIALIZE every consumer
     # behind one task (2.4× slower at 32 cores).
@@ -1500,7 +1501,7 @@ def q139_bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r13 (guide §2.5 input skew): spread the single-split fixture scan
     # so the per-branch shingle computation parallelizes; no-op at
-    # corpus scale (see _tables.spread).
+    # corpus scale (see operators/spread.py).
     d = spread(t(spark, sf_dir, "documents"), "doc_id").select(
         "doc_id",
         "lang",

@@ -129,12 +129,7 @@ class IdempotentForeachBatchSink(StreamingSink):
         return write_batch
 
     def batch_fn(self) -> BatchFn:
-        inner = self._batch_fn or self._default_batch_fn()
-
-        def guarded(df: DataFrame, batch_id: int) -> None:
-            inner(df, batch_id)
-
-        return guarded
+        return self._batch_fn or self._default_batch_fn()
 
     # -- writer ------------------------------------------------------------
 

@@ -85,15 +85,12 @@ class DeltaStreamingSource(StreamingSource):
         return spark.readStream.options(**opts).format(self.FORMAT)
 
     def load(self, session: Optional[SparkSession] = None) -> DataFrame:
-        """Bind the reader: ``.table(name)`` for managed tables, else
-        ``.load(path)`` — the split the reference documents
+        """Bind the reader: ``.load(path)`` when a path is configured,
+        else ``.table(name)`` — the split the reference documents
         (``delta_source.py:15-19``)."""
         spark = self._session(session)
         reader = self.generate(spark)
         path = self.setting("path", spark)
         if path:
             return reader.load(path)
-        name = self.table_name(spark)
-        if self.is_managed(name):
-            return reader.table(name)
-        return reader.table(name)
+        return reader.table(self.table_name(spark))

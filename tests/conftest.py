@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -89,14 +90,27 @@ def spark():
 
 
 @pytest.fixture(params=["symlink", "manifest"])
-def pointer_mode(request):
-    """Run a persisted-index lifecycle test under BOTH generation-pointer
-    modes (``operators/tombstones.py::set_pointer_mode``): the local-FS
-    symlink and the object-store manifest file. Tests that take this
-    fixture prove the whole swap/retention/read_live protocol is
-    pointer-kind-agnostic."""
-    from pyspark_streaming_base_spark.operators.tombstones import set_pointer_mode
+def pointer_writer(request, monkeypatch):
+    """Run a persisted-index lifecycle test against BOTH generation-pointer
+    kinds an index can hold: ``manifest`` (the pointer file ``swap_in``
+    publishes) and ``symlink`` (the ``os.symlink`` pointer earlier
+    versions published). Under ``symlink`` every ``swap_in`` ends with
+    the earlier writer's pointer, so the test proves this version's
+    readers, appends, retention, debris sweep and vacuum keep working on
+    an index an earlier version still compacts."""
+    import uuid
 
-    prev = set_pointer_mode(request.param)
-    yield request.param
-    set_pointer_mode(prev)
+    from pyspark_streaming_base_spark.operators import tombstones
+
+    if request.param == "symlink":
+        publish = tombstones._publish_pointer
+
+        def publish_symlink(live_path, gen):
+            prev = publish(live_path, gen)
+            tmp = f"{live_path}.ptr.{uuid.uuid4().hex}"
+            os.symlink(os.path.abspath(gen), tmp)
+            os.replace(tmp, live_path)
+            return prev
+
+        monkeypatch.setattr(tombstones, "_publish_pointer", publish_symlink)
+    return request.param

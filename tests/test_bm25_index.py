@@ -162,7 +162,7 @@ def test_delete_is_idempotent_and_ignores_unknown_ids(spark, docs, tmp_path):
 
 
 def test_compact_folds_tombstones_and_preserves_probes(
-    spark, docs, tmp_path, pointer_mode
+    spark, docs, tmp_path, pointer_writer
 ):
     import os
 
@@ -266,3 +266,42 @@ def test_batch_probe_respects_tombstones(spark, docs, tmp_path):
         )
     )
     assert batch_q1 == one
+
+
+def test_probe_reads_tombstones_once_for_both_live_tables(
+    spark, docs, tmp_path, monkeypatch
+):
+    """The shared loader policy (``tombstones.load_live_view``): a probe
+    of a tombstoned index anti-joins BOTH live tables (postings and
+    doclens) but reads the tombstone set once; a compaction through the
+    same loader still removes the deleted ids from both tables."""
+    from pyspark_streaming_base_spark.operators import tombstones
+    from pyspark_streaming_base_spark.operators.bm25 import (
+        compact_bm25_index,
+        delete_from_bm25_index,
+    )
+
+    idx = str(tmp_path / "idx")
+    build_bm25_index(docs, idx)
+    gone = [r[0] for r in docs.select("doc_id").orderBy("doc_id").limit(5).collect()]
+    delete_from_bm25_index(spark, idx, gone)
+
+    calls = []
+    real = tombstones.read_tombstones
+
+    def counting(spark_, tomb_path):
+        calls.append(tomb_path)
+        return real(spark_, tomb_path)
+
+    monkeypatch.setattr(tombstones, "read_tombstones", counting)
+    hits = query_bm25_index(spark, idx, _BM25_TERMS, top_k=_BM25_TOPK)
+    plan = hits._jdf.queryExecution().optimizedPlan().toString()
+    # postings and doclens are both anti-joined (doclens feeds two branches)
+    assert plan.count("LeftAnti") >= 2, plan
+    assert calls == [f"{idx}/tombstones"]
+    assert not {r["doc_id"] for r in hits.collect()} & set(gone)
+
+    compact_bm25_index(spark, idx)
+    for table in ("postings", "doclens"):
+        raw = tombstones.read_live(spark, f"{idx}/{table}")
+        assert raw.filter(F.col("doc_id").isin(gone)).count() == 0, table

@@ -96,11 +96,11 @@ def test_probe_does_not_reshingle_corpus(spark, tmp_path):
     assert "PushedFilters: [IsNotNull(doc_id), LessThan(doc_id,3)" in plan
 
 
-def test_delete_then_compact_lifecycle(spark, tmp_path, pointer_mode):
+def test_delete_then_compact_lifecycle(spark, tmp_path, pointer_writer):
     """Tombstoned docs vanish from BOTH pair sides immediately; compact
-    folds them in (pointer swap — symlink or manifest file, per mode —
-    slice layout preserved), clears the tombstone set, and preserves
-    the probe exactly."""
+    folds them in (pointer swap — a pointer file, or the symlink an
+    earlier version wrote — slice layout preserved), clears the
+    tombstone set, and preserves the probe exactly."""
     from pyspark_streaming_base_spark.operators.tombstones import snapshot_path
 
     path = str(tmp_path / "cidx")
@@ -117,7 +117,7 @@ def test_delete_then_compact_lifecycle(spark, tmp_path, pointer_mode):
     assert not os.path.exists(f"{path}/tombstones")
     for table in ("sets", "postings"):
         live = f"{path}/{table}"
-        if pointer_mode == "symlink":
+        if pointer_writer == "symlink":
             assert os.path.islink(live)
         else:
             assert os.path.isfile(live) and not os.path.islink(live)
@@ -242,7 +242,7 @@ def test_prefix_probe_is_sublinear_in_shingles(spark, tmp_path):
     assert prefix_rows <= 0.2 * total
 
 
-def test_append_after_compact_through_pointer(spark, tmp_path, pointer_mode):
+def test_append_after_compact_through_pointer(spark, tmp_path, pointer_writer):
     """The crawl loop keeps working ACROSS a compaction: after
     delete+compact turns the tables into generation pointers (either
     kind), a partitioned APPEND must land in the current generation and

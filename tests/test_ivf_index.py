@@ -217,11 +217,11 @@ def test_default_quantizer_survives_offset_id_space(spark, tmp_path):
     assert {r.cent_id for r in cent.collect()} == set(range(5_000, 5_008))
 
 
-def test_delete_equals_rebuild_without(spark, tmp_path, pointer_mode):
+def test_delete_equals_rebuild_without(spark, tmp_path, pointer_writer):
     """Tombstoned probe == index rebuilt over survivors (frozen
     centroids shared, so cells are identical and only membership
     changes). Lifecycle template: operators/tombstones.py — run under
-    both pointer modes."""
+    both pointer kinds."""
     from pyspark_streaming_base_spark.operators.ivf import (
         compact_ivf_index,
         delete_from_ivf_index,

@@ -144,7 +144,7 @@ def test_delete_removes_candidates_and_equals_rebuild(spark, tmp_path):
     assert not any(ix in gone for _, ix in got)
 
 
-def test_compact_folds_tombstones(spark, tmp_path, pointer_mode):
+def test_compact_folds_tombstones(spark, tmp_path, pointer_writer):
     import os
 
     from pyspark_streaming_base_spark.operators.minhash import (

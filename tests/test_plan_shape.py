@@ -84,7 +84,7 @@ def test_minhash_single_aggregation_pass(spark):
     plan = formatted_plan(df)
     # one agg for 16 mins + banding via explode → small constant exchange
     # count, never O(bands): r13 reads 7 = 4 conditional single-split
-    # spreads (the corpus scan feeds 4 plan branches; _tables.spread is
+    # spreads (the corpus scan feeds 4 plan branches; operators.spread is
     # a no-op on multi-split input) + 2 band-join + 1 pair-dedup
     assert shuffle_count(df) <= 8, plan
 

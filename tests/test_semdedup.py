@@ -406,11 +406,11 @@ def test_build_index_rejects_empty_centroids(spark, tmp_path):
         build_semdedup_index(emb, str(tmp_path / "x"), empty)
 
 
-def test_delete_equals_rebuild_without(spark, tmp_path, pointer_mode):
+def test_delete_equals_rebuild_without(spark, tmp_path, pointer_writer):
     """Tombstoned policy run == policy over the index rebuilt without
     the deleted vectors (frozen centroids shared): a deleted vector can
     neither be removed nor shield a near-dup from removal. Run under
-    both pointer modes (the compact inside delete_* exercises swaps)."""
+    both pointer kinds (the compact inside delete_* exercises swaps)."""
     import os
 
     from pyspark.sql import functions as F

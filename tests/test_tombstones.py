@@ -35,10 +35,15 @@ def _live(tmp_path, name="live"):
     return str(tmp_path / name)
 
 
-def _pointer_ok(live: str, mode: str) -> bool:
-    if mode == "symlink":
+def _pointer_ok(live: str, kind: str) -> bool:
+    """``symlink``: the earlier versions' link. ``manifest``: a regular
+    pointer file whose first line is the pointer magic."""
+    if kind == "symlink":
         return os.path.islink(live)
-    return os.path.isfile(live) and not os.path.islink(live)
+    if not os.path.isfile(live) or os.path.islink(live):
+        return False
+    with open(live, encoding="utf-8") as f:
+        return f.readline().strip() == "spark-graft-generation-pointer"
 
 
 def _gen_dirs(tmp_path):
@@ -50,27 +55,27 @@ def _gen_dirs(tmp_path):
 
 
 def test_swap_in_migrates_legacy_dir_then_flips_pointer(
-    spark, tmp_path, pointer_mode
+    spark, tmp_path, pointer_writer
 ):
     """First swap over a plain directory (a pre-pointer-layout index)
-    migrates it to a generation dir + pointer (symlink or manifest
-    file, per mode); subsequent swaps are pure pointer flips and the
-    table contents follow."""
+    migrates it to a generation dir + pointer (a pointer file, or the
+    symlink an earlier version wrote); subsequent swaps are pure pointer
+    flips and the table contents follow."""
     live = _live(tmp_path)
     _ids(spark, 10).write.parquet(live)
     assert not os.path.islink(live)
 
     swap_in(live, _ids(spark, 6))
-    assert _pointer_ok(live, pointer_mode)
+    assert _pointer_ok(live, pointer_writer)
     assert read_live(spark, live).count() == 6
 
     swap_in(live, _ids(spark, 3))
-    assert _pointer_ok(live, pointer_mode)
+    assert _pointer_ok(live, pointer_writer)
     assert read_live(spark, live).count() == 3
 
 
 def test_swap_retains_published_generations_and_vacuum_reclaims(
-    spark, tmp_path, pointer_mode
+    spark, tmp_path, pointer_writer
 ):
     """Retention is count-based over PUBLISHED generations: the newest
     GENERATIONS_RETAINED (2) previous gens survive each swap — so even
@@ -98,7 +103,7 @@ def test_swap_retains_published_generations_and_vacuum_reclaims(
     assert read_live(spark, live).count() == 9
 
 
-def test_reader_survives_back_to_back_swaps(spark, tmp_path, pointer_mode):
+def test_reader_survives_back_to_back_swaps(spark, tmp_path, pointer_writer):
     """The delete-time auto-compaction scenario: two rapid flips after a
     reader resolved the pointer. With count-based retention (2 previous
     published generations) the reader's snapshot files are still there;
@@ -118,7 +123,7 @@ def test_reader_survives_back_to_back_swaps(spark, tmp_path, pointer_mode):
 
 
 def test_snapshot_resolved_before_swap_survives_the_swap(
-    spark, tmp_path, pointer_mode
+    spark, tmp_path, pointer_writer
 ):
     """The deterministic core of reader safety: a reader that resolved
     the pointer (the read_live protocol) BEFORE a compaction flip can
@@ -140,7 +145,7 @@ def test_snapshot_resolved_before_swap_survives_the_swap(
 
 
 def test_concurrent_reader_never_sees_missing_table(
-    spark, tmp_path, pointer_mode
+    spark, tmp_path, pointer_writer
 ):
     """A reader thread hammering the live table through repeated swaps
     (via the read_live pointer-resolution protocol every probe uses)
@@ -178,11 +183,11 @@ def test_concurrent_reader_never_sees_missing_table(
 
 
 def test_append_through_pointer_reaches_current_generation(
-    spark, tmp_path, pointer_mode
+    spark, tmp_path, pointer_writer
 ):
     """Index APPEND paths go through append_live (resolve the pointer,
-    then parquet-append into the current generation) — mode-agnostic:
-    a raw write through a manifest pointer FILE would fail outright."""
+    then parquet-append into the current generation): a raw write
+    through the pointer FILE would fail outright."""
     from pyspark_streaming_base_spark.operators.tombstones import append_live
 
     live = _live(tmp_path)
@@ -192,34 +197,26 @@ def test_append_through_pointer_reaches_current_generation(
     assert read_live(spark, live).count() == 8
 
 
-def test_pointer_mode_migration_both_directions(spark, tmp_path):
-    """Mode is WRITE-time only: an index compacted under symlink
-    pointers keeps working when the next swap publishes a manifest
-    file, and vice versa — readers resolve either pointer kind, so a
-    deployment can move an index between filesystems one swap at a
-    time."""
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        set_pointer_mode,
-    )
+def test_symlink_pointer_from_earlier_version_reads_and_converts(spark, tmp_path):
+    """Earlier versions published the generation pointer as a symlink.
+    Such an index still reads and appends through the link, and its
+    next swap replaces the link with a pointer file serving the same
+    rows."""
+    from pyspark_streaming_base_spark.operators.tombstones import append_live
 
     live = _live(tmp_path)
-    _ids(spark, 5).write.parquet(live)
-    prev = set_pointer_mode("symlink")
-    try:
-        swap_in(live, _ids(spark, 6))
-        assert os.path.islink(live)
+    gen = f"{live}.gen.earlier"
+    _ids(spark, 5).write.parquet(gen)
+    os.symlink(gen, live)  # the layout an earlier version wrote
 
-        set_pointer_mode("manifest")
-        swap_in(live, _ids(spark, 7))  # file replaces the symlink
-        assert os.path.isfile(live) and not os.path.islink(live)
-        assert read_live(spark, live).count() == 7
+    assert read_live(spark, live).count() == 5
+    append_live(_ids(spark, 2, start=100), live)
+    rows = sorted(r["doc_id"] for r in read_live(spark, live).collect())
+    assert len(rows) == 7
 
-        set_pointer_mode("symlink")
-        swap_in(live, _ids(spark, 8))  # symlink replaces the file
-        assert os.path.islink(live)
-        assert read_live(spark, live).count() == 8
-    finally:
-        set_pointer_mode(prev)
+    swap_in(live, read_live(spark, live))
+    assert _pointer_ok(live, "manifest")
+    assert sorted(r["doc_id"] for r in read_live(spark, live).collect()) == rows
 
 
 def test_manifest_pointer_file_is_validated(spark, tmp_path):
@@ -229,10 +226,7 @@ def test_manifest_pointer_file_is_validated(spark, tmp_path):
     manifest pointer carries the magic first line."""
     import pytest
 
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        set_pointer_mode,
-        snapshot_path,
-    )
+    from pyspark_streaming_base_spark.operators.tombstones import snapshot_path
 
     stray = str(tmp_path / "stray")
     with open(stray, "w") as f:
@@ -242,25 +236,10 @@ def test_manifest_pointer_file_is_validated(spark, tmp_path):
 
     live = _live(tmp_path)
     _ids(spark, 4).write.parquet(live)
-    prev = set_pointer_mode("manifest")
-    try:
-        swap_in(live, _ids(spark, 5))
-        first = open(live).readline().strip()
-        assert first == "spark-graft-generation-pointer"
-        assert os.path.isdir(snapshot_path(live))
-    finally:
-        set_pointer_mode(prev)
-
-
-def test_set_pointer_mode_rejects_unknown(spark):
-    import pytest
-
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        set_pointer_mode,
-    )
-
-    with pytest.raises(ValueError, match="unknown pointer mode"):
-        set_pointer_mode("s3-special")
+    swap_in(live, _ids(spark, 5))
+    first = open(live).readline().strip()
+    assert first == "spark-graft-generation-pointer"
+    assert os.path.isdir(snapshot_path(live))
 
 
 def test_read_tombstones_missing_vs_corrupt(spark, tmp_path):
@@ -307,7 +286,7 @@ def test_maybe_compact_fires_at_threshold_and_preserves_probe(spark, tmp_path):
 
     def compact():
         calls.append(1)
-        swap_in(live, apply_tombstones(spark, tomb, spark.read.parquet(live), "doc_id"))
+        swap_in(live, apply_tombstones(spark, tomb, read_live(spark, live), "doc_id"))
         clear_tombstones(tomb)
 
     assert maybe_compact(tomb, live, compact) is False  # 1% < 10%
@@ -317,13 +296,13 @@ def test_maybe_compact_fires_at_threshold_and_preserves_probe(spark, tmp_path):
     before = sorted(
         r["doc_id"]
         for r in apply_tombstones(
-            spark, tomb, spark.read.parquet(live), "doc_id"
+            spark, tomb, read_live(spark, live), "doc_id"
         ).collect()
     )
     assert maybe_compact(tomb, live, compact) is True
     assert calls == [1]
     assert tombstone_ratio(tomb, live) is None  # tombstones cleared
-    after = sorted(r["doc_id"] for r in spark.read.parquet(live).collect())
+    after = sorted(r["doc_id"] for r in read_live(spark, live).collect())
     assert after == before
 
 
@@ -401,7 +380,9 @@ def test_delete_time_auto_compaction_hook(spark, tmp_path):
     assert after == [p for p in base if victim not in p]
 
 
-def test_swap_sweeps_crash_debris(spark, tmp_path, pointer_mode):
+def test_swap_sweeps_crash_debris(
+    spark, tmp_path, pointer_writer
+):
     """A crash between the generation write and the pointer flip leaves
     a stale gen dir (and possibly a stale ptr temp); the live pointer is
     untouched — the old snapshot still serves — and the NEXT successful

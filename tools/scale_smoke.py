@@ -249,7 +249,7 @@ def _band_pairs(sig):
     return index_band_pairs(sig)
 
 
-def crawl_smoke(spark, reps, pointer_mode: str = "symlink") -> None:
+def crawl_smoke(spark, reps) -> None:
     """Incremental crawl loop vs the from-scratch recompute it replaces,
     as the corpus grows and the daily batch stays FIXED (the real
     deployment shape: yesterday's corpus is n×, today's crawl is not).
@@ -267,27 +267,11 @@ def crawl_smoke(spark, reps, pointer_mode: str = "symlink") -> None:
     built outside the timers; per-run index copies keep appends from
     compounding.
 
-    ``pointer_mode`` (r12, r11 verdict item 8): "manifest" runs the
-    SAME loop under the object-store generation-pointer protocol — the
-    pre-timer copy is rotated behind a manifest pointer via ``swap_in``
-    (a fresh build writes a plain directory; only a swap creates the
-    pointer layout, so without the rotation manifest mode would
-    exercise nothing), and the timed append/probe then resolve the
-    pointer on every touch, matching the lifecycle test suites'
+    The pre-timer copy is rotated behind a generation pointer via
+    ``swap_in`` (a fresh build writes a plain directory; only a swap
+    creates the pointer layout), so the timed append/probe resolve the
+    pointer file on every touch, matching the lifecycle test suites'
     coverage at growth scale."""
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        set_pointer_mode,
-    )
-
-    prev_mode = set_pointer_mode(pointer_mode)
-    tag = "" if pointer_mode == "symlink" else f"[{pointer_mode}]"
-    try:
-        _crawl_smoke_loop(spark, reps, tag)
-    finally:
-        set_pointer_mode(prev_mode)
-
-
-def _crawl_smoke_loop(spark, reps, tag):
     import shutil
     import tempfile
 
@@ -325,15 +309,7 @@ def _crawl_smoke_loop(spark, reps, tag):
             ).write.parquet(canon)
 
             run_idx = f"{root}/idx_inc"
-            if tag:
-                # object-store mode: put the pre-timer copy BEHIND a
-                # generation pointer (swap_in of its own live rows), so
-                # the timed append/probe resolve a manifest on every
-                # touch — a fresh build is a plain directory and would
-                # exercise none of the pointer protocol
-                swap_in(run_idx, spark.read.parquet(idx))
-            else:
-                shutil.copytree(idx, run_idx)
+            swap_in(run_idx, spark.read.parquet(idx))
             before = read_live(spark, run_idx).count()
             t0 = time.perf_counter()
             append_minhash_index(batch, run_idx)
@@ -360,8 +336,8 @@ def _crawl_smoke_loop(spark, reps, tag):
                 _band_pairs(spark.read.parquet(full_idx))
             ).write.format("noop").mode("overwrite").save()
             dt_reb = time.perf_counter() - t0
-            print(f"{'crawl_incremental' + tag:>30}  x{n:<3} {dt_inc:7.3f}s")
-            print(f"{'crawl_rebuild' + tag:>30}  x{n:<3} {dt_reb:7.3f}s")
+            print(f"{'crawl_incremental':>30}  x{n:<3} {dt_inc:7.3f}s")
+            print(f"{'crawl_rebuild':>30}  x{n:<3} {dt_reb:7.3f}s")
         finally:
             shutil.rmtree(root, ignore_errors=True)
 
@@ -510,9 +486,6 @@ def main() -> None:
                 spark.catalog.clearCache()
     if "crawl" in run:
         crawl_smoke(spark, reps)
-        # one growth rep under the object-store pointer protocol (r12):
-        # proves the manifest layout sustains the same O(batch) loop
-        crawl_smoke(spark, [reps[-1]], pointer_mode="manifest")
     if "bloom" in run:
         bloom_smoke(spark, reps)
     if "semdedup" in run:
