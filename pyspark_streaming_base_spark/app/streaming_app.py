@@ -179,13 +179,7 @@ class StreamingApp(App):
         """
         if not self._sources or not self._sinks:
             raise RuntimeError("run() requires at least one source and one sink")
-        source = self.source()
-        # Delta/File sources bind the reader themselves (.table vs .load);
-        # Kafka-style sources load bare.
-        if hasattr(source, "load"):
-            df: DataFrame = source.load(self.spark)
-        else:
-            df = source.generate(self.spark).load()
+        df: DataFrame = self.source().load(self.spark)
         if transform is not None:
             df = transform(df)
         sink = self.sink()

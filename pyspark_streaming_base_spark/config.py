@@ -108,7 +108,7 @@ class ConfigResolver:
                 out[key] = str(val)
         return out
 
-    # -- mutation (builder-style) -----------------------------------------
+    # -- mutation ---------------------------------------------------------
 
     def with_override(self, key: str, value: Optional[str]) -> "ConfigResolver":
         if value is None:
@@ -116,13 +116,3 @@ class ConfigResolver:
         else:
             self._overrides[key] = str(value)
         return self
-
-    def with_overrides(self, values: Mapping[str, str]) -> "ConfigResolver":
-        for k, v in values.items():
-            self.with_override(k, v)
-        return self
-
-    def known_keys(self) -> Dict[str, Optional[str]]:
-        merged: Dict[str, Optional[str]] = dict(self._defaults)
-        merged.update(self._overrides)
-        return merged

@@ -44,274 +44,65 @@ REGISTRY: Dict[str, QuerySpec] = {}
 # driver-verified correctness row every round.  Queries outside the prefix
 # remain fully checked by the stricter local mirror
 # (tools/check_correctness.py) and pytest.
+#
+# Rotation rule: a newly registered query rotates into the prefix in the
+# round it lands, so no query accrues never-driver-checked debt.  Its slot
+# comes from a query that is already driver-green with its code unchanged
+# since (oracle-bearing rows are preferred over rows-only ones).  Every
+# SURVEY §2 component keeps at least one representative in the prefix
+# (tests/test_queries_registry.py pins the set).  The per-round history of
+# who yielded to whom lives in git.
 DRIVER_PRIORITY: tuple = (
-    # ROUND-9 ROTATION: same 26-keeper component-covering core. This
-    # round closes the r8 rotation debt: q166-q169 were registered after
-    # the r8 prefix froze and have no driver CORRECTNESS row (q166/q167/
-    # q169 oracle-bearing; q168 upgraded to a recursive-CTE oracle this
-    # round). Their four slots come from the late-r7 ROWS-ONLY set
-    # (q140_mmr/q143_bpe/q146_ann_recall/q150_retrieval) — all
-    # driver-green in CORRECTNESS_r08, all pinned against numpy/python
-    # mirrors in pytest, and rows-only driver checks are the weakest
-    # evidence tier, so trading them for three hash-checked rows is a
-    # strict upgrade. All rotated-out queries remain exact-green on the
-    # stricter local mirror (tools/check_correctness.py) and pytest,
-    # like every prior rotation.
-    #
-    # keepers: C1-C18 core relational + flagship extension reps
-    "q01_pricing_summary",      # C6 agg (headline)
-    "q02_filter_pushdown",      # C1
-    "q03_derived_projection",   # C2
-    "q04_revenue_by_nation",    # C3
-    "q05_semi_join",            # C4
-    "q07_theta_join",           # C5
-    "q10_count_distinct",       # C7
-    "q15_set_ops",              # C11
-    "q16_string_funcs",         # C12
-    "q17_date_funcs",           # C13
-    "q18_math_funcs",           # C14
-    "q22_exact_dedup",          # C16
-    "q25_from_json",            # C15
-    "q28_udaf_weighted_avg",    # B8/C25
-    "q30_topk_per_group",       # C10
-    "q35_grouping_sets",        # C8
-    "q40_ngram_jaccard_pairs",  # C17 exact verifier
-    "q60_knn_bruteforce",       # C18 exact
-    "q70_tumbling_window",      # C20
-    "q72_session_window",       # C21
-    "q73_stream_static_join",   # C23
-    "q80_binary_metadata",      # multimodal
-    # component-required reps (C19 text, C9 windows, C22 stateful,
-    # C25 Arrow tier) + flagship extension keepers
-    "q47_repetition_score",
-    "q96_min_cost_supplier",
-    "q79_late_data_audit",
-    "q98_arrow_digest",
-    # LATE-ROUND-7 FIRST-TIMERS (the r8 rotation's whole budget): every
-    # query registered after the r7 prefix froze, oracle-bearing first.
-    # These are round 7's flagship operators — KS drift, PRF expansion,
-    # batch BM25, interval coverage, epoch materialization — and the
-    # driver CORRECTNESS row is the graded signal they lack.
-    "q154_bm25_batch_retrieval",
-    # ROUND-8 LATE SET (the r9 rotation's whole budget): registered
-    # after the r8 prefix froze — Mann-Whitney/AUC drift, source
-    # concentration, decile Q-Q (oracle) and k-core (closure-CTE
-    # oracle as of r9). They take the slots of the four late-r7
-    # rows-only entries (q140/q143/q146/q150 — driver-green r8,
-    # pytest-pinned twins keep them covered; q140 additionally gained a
-    # recursive-CTE oracle later in r9, hash-checked by the stricter
-    # local mirror at both sf even though it sits outside this prefix).
-    # ROUND-8 NEW OPERATORS, rotated in the same round they were written
-    # so no never-driver-checked debt accrues (q97/q99/q107/q108/q89/
-    # q100/q124 — all driver-green in r7, code unchanged — yield their
-    # slots; C6/C9/C13/C23/C17 stay covered by the q01/q96/q17/q73/
-    # q40+q44 keepers)
-    "q156_containment_pairs",
-    "q160_column_profile",
-    # ROUND-9 NEW OPERATORS, rotated in the same round they were
-    # written (the r8 convention — no never-driver-checked debt):
-    # char-level quality stats, the cross-source near-dup matrix, and
-    # the Jaccard-vs-containment measure-overlap report — all
-    # oracle-bearing. Their slots come from q157/q161/q162 (driver-
-    # green in CORRECTNESS_r08, code unchanged; C19 text stays covered
-    # by q47/q147/q170, the stats family by q162's mirror + the
-    # q166/q169 keepers here).
-    # ROUND-11: q170_char_stats and q172_cross_source_dup_matrix yield
-    # to q189/q190 below (both driver-green in r9 AND r10, code
-    # unchanged; C19 text profiling keeps q47/q175/q176 in this prefix
-    # plus the new q189, and the source-overlap family keeps THREE
-    # reps: q177, q178, q181 — plus q190's per-source dedup economics).
-    # ROUND-13: q174_keeper_policy_report yields to q194 below
-    # (driver-green hash rows from r8 through r12, code unchanged; the
-    # quality-gate family keeps q47 + the q180 waterfall in this
-    # prefix, and the keeper-policy machinery stays exact-green on the
-    # local mirror at three SFs). Historical: q174 took q158's slot in
-    # r9 (driver-green r8).
-    "q163_pps_token_sample",    # q61 yields (rows-only, driver-green r7;
-    # C18 stays covered by the q60 keeper + pytest recall pins)
-    # ROUND-11: q164_kcenter_coreset yields to q188 below (q164
-    # driver-green r9 AND r10 with its recursive-CTE oracle, code
-    # unchanged; the greedy-selection family keeps the q140_mmr keeper
-    # in this prefix, and q164 stays exact-green on the local mirror).
-    # q44's earlier yield note: its components engine stays
-    # driver-exercised through the q148 closure-CTE oracle here.
-    "q165_cvm_drift",           # q41 yields (rows-only, driver-green r7;
-    # C17's scale path stays pinned by the recall pytest + local mirror)
-    # ROUND-10 ROTATION (the r9 verdict's task 4): q103 and q140 were
-    # upgraded to recursive-CTE oracles in r9 (pipeline.py / mmr.py +
-    # similarity.py) but have never had a driver HASH row — q140's r8
-    # row was rows-only, q103 predates its oracle. Their slots come
-    # from q151/q152 (driver-green hash rows in BOTH r8 and r9, code
-    # unchanged since; the sampling family stays covered by the
-    # q153_epoch_materialization and q163_pps_token_sample keepers in
-    # this prefix).
-    "q103_pagerank_top20",
-    "q140_mmr_diverse_topk",
-    # ROUND-10 NEW OPERATORS, rotated in their birth round (the
-    # standing convention — no never-driver-checked debt): line-level
-    # repetition stats (the Gopher/Dolma boilerplate tier) and
-    # top/duplicate-bigram character share — both oracle-bearing.
-    # Their slots come from q149/q153 (driver-green hash rows in BOTH
-    # r8 and r9, code unchanged since; interval/epoch machinery stays
-    # covered by the q73/q79 streaming keepers and the q163 sampler).
-    "q175_line_repetition",
-    # ROUND-12: q176_topgram_share yields to q191 below (driver-green
-    # hash rows in BOTH r10 and r11, code unchanged; C19 profiling
-    # keeps q47 + q175 in this prefix, and the top/duplicate-bigram
-    # signal itself stays driver-exercised inside q180's waterfall
-    # rules 4–5).
-    # ROUND-10 SECOND WAVE, rotated in their birth round: per-source
-    # shingle novelty (the marginal-contribution curve), template-prefix
-    # cluster report (the machine-generated-page detector), and
-    # inter-arrival burstiness cv² (the bot/scraper signature) — all
-    # oracle-bearing, exact-green at sf0.001/0.01/0.1. Their slots come
-    # from q145/q147/q148 (driver-green hash rows in BOTH r8 and r9,
-    # code unchanged since; the quality-gate family stays covered by
-    # q47+q174 in this prefix, C19 profiling by q170/q175/q176, and the
-    # components/cluster engine by the q168 closure-CTE oracle).
-    # ROUND-13: q177_source_novelty yields to q195 below (driver-green
-    # hash rows in r10 through r12, code unchanged; the source-profiling
-    # family keeps q181 + q190's per-source economics in this prefix —
-    # plus q195 itself profiles per source — and the novelty curve stays
-    # exact-green on the local mirror at three SFs).
-    # ROUND-13: q178_template_prefix_clusters yields to q193 below
-    # (driver-green hash rows in BOTH r11 and r12, code unchanged; the
-    # source-profiling family keeps THREE prefix reps — q177, q181, and
-    # q190's per-source economics — and q178's template detector stays
-    # exact-green on the local mirror at three SFs).
-    # ROUND-12: q179_interarrival_burstiness yields to q192 below
-    # (driver-green hash rows in BOTH r10 and r11, code unchanged; the
-    # event-behavior family keeps q182_event_transitions and
-    # q184_conversion_latency in this prefix plus the q72/q73/q79
-    # streaming keepers, and the cv² machinery stays exact-green on the
-    # local mirror at three SFs).
-    # ... and the quality-filter waterfall report (rule-by-rule marginal
-    # kill + surviving docs/tokens — the artifact that prices a Gopher/
-    # Dolma rule stack in training tokens). Its slot comes from
-    # q144_ks_drift (driver-green hash rows in BOTH r8 and r9, code
-    # unchanged; the drift family keeps THREE prefix reps:
-    # q165_cvm_drift, q166_mann_whitney, q169_decile_qq).
-    "q180_filter_waterfall",
-    # ROUND-13: q181_cross_lingual_leakage yields to q199 below
-    # (driver-green hash rows r10 through r12, code unchanged; the
-    # leakage/dedup-audit family keeps q191_split_leakage_audit and
-    # q183_cluster_density_audit in this prefix, and q181 stays
-    # exact-green on the local mirror at three SFs). Historical: q181
-    # took q155's slot in r10. The event-type transition matrix
-    # (first-order Markov chain) keeps its slot:
-    "q182_event_transitions",
-    # ... and the cluster edge-density audit (the over-merge diagnostic
-    # for closure-based dedup — chain-shaped clusters are the docs a
-    # canonical-keeper delete would wrongly remove). Its slot comes from
-    # q159_source_overlap (driver-green r9, code unchanged; the source-
-    # overlap family now has FOUR prefix reps: q172, q177, q178, q181).
-    "q183_cluster_density_audit",
-    # ... and the conversion-latency report (funnel SLA percentiles via
-    # the shared bucketed two-pass prefix sum — exact order statistics,
-    # never a global-order window). Its slot comes from
-    # q166_mann_whitney (driver-green r9, code unchanged; the drift
-    # family keeps TWO prefix reps, q165_cvm_drift and q169_decile_qq,
-    # plus the q144/q165/q166 shared _ecdf machinery exercised by this
-    # very query).
-    "q184_conversion_latency",
-    # ROUND-13: q185_dup_span_by_source yields to q197 below
-    # (driver-green hash rows r10 through r12, code unchanged; the
-    # dedup-audit family keeps q40, q156, q183, and q191 in this
-    # prefix, and the span machinery stays driver-exercised through
-    # q107's keeper inside the q190 ladder; q185 itself stays
-    # exact-green on the local mirror at three SFs). Historical: q185
-    # took q173's slot in r10.
-    # ROUND-13: q186_ship_latency_by_priority yields to q196 below
-    # (driver-green hash rows r10 through r12, code unchanged; the
-    # percentile/latency family keeps q184_conversion_latency here and
-    # the shared _ecdf machinery stays driver-exercised through q184 +
-    # q187; q186 itself stays exact-green on the local mirror at three
-    # SFs). Historical: q186 took q169_decile_qq's slot in r10.
-    # ROUND-13: q187_revenue_pareto yields to q198 below (driver-green
-    # hash rows in r11 AND r12 — including its DECIMAL(38,0) channel —
-    # code unchanged; the _ecdf prefix-sum machinery keeps TWO prefix
-    # reps, q184_conversion_latency and the q194 policy table, and the
-    # Lorenz curve stays exact-green on the local mirror at three SFs).
-    # Historical: q187 took q168_kcore's slot in r11.
-    # ROUND-11 NEW OPERATOR, rotated in its birth round: the JPEG
-    # header-metadata audit — the multimodal family's second prefix rep
-    # next to q80, and the first whose oracle exercises a PYTHON
-    # (Arrow-batched mapInPandas) encode→parse round trip end to end.
-    # Its slot comes from q164_kcenter_coreset (see the yield note
-    # above).
-    "q188_jpeg_metadata_audit",
-    # ROUND-11 SECOND WAVE, rotated in their birth round: the
-    # context-window packing-waste report (the padding bill per feed —
-    # q86 chunking's economic complement) and the dedup token-yield
-    # ladder (raw → corpus-wide doc dedup → C4 segment dedup tokens per
-    # source, both keeper windows on int64 hash60 keys) — both
-    # oracle-bearing, exact-green at sf0.001/0.01/0.1. Their slots come
-    # from q170/q172 (see the yield note above).
-    "q189_packing_waste",
-    "q190_token_yield_ladder",
-    # ROUND-12 NEW OPERATOR, rotated in its birth round: the cross-split
-    # near-dup leakage audit — measures the train/test contamination the
-    # naive md5(doc_id) split incurs on q44's verified clusters (the
-    # hazard q127's canonical-keyed split prevents; q183's audit pattern
-    # applied to q49). Oracle: the shared recursive-closure CTE + the
-    # split-rule CASE. Its slot comes from q176_topgram_share (see the
-    # yield note above).
-    "q191_split_leakage_audit",
-    # ... and the concat-packing boundary audit (q189's other half:
-    # padding bill vs splitting bill — docs straddling window
-    # boundaries under the md5-shuffled per-source concat order, via
-    # the q163 two-pass prefix sum partitioned by source). Its slot
-    # comes from q179_interarrival_burstiness (see the yield note
-    # above).
-    "q192_packing_boundary_audit",
-    # ROUND-13 NEW OPERATOR, rotated in its birth round: the WAV/RIFF
-    # audio-metadata audit — the multimodal family's third prefix rep
-    # next to q80/q188 and the first ORACLE row for the audio modality
-    # (the q188 encode→parse round-trip recipe on RIFF chunk walking +
-    # exact integer duration math). Its slot comes from
-    # q178_template_prefix_clusters (see the yield note above).
-    "q193_wav_metadata_audit",
-    # ... the padding-vs-packing POLICY table (q189's padding bill and
-    # q192's splitting bill off one scan, closed with an integer-
-    # compared recommendation — the decision artifact those two price).
-    # Its slot comes from q174_keeper_policy_report (yield note above).
-    "q194_packing_policy",
-    # ... and the per-feed audio profile (q193's RIFF tier × the
-    # per-source rollup: duration mass, dead-letter rate, format mix).
-    # Its slot comes from q177_source_novelty (yield note above).
-    "q195_audio_profile_by_source",
-    # ROUND-13 THIRD WAVE, rotated in its birth round: the MP4/ISO-BMFF
-    # video-metadata audit — completes the mandate's image/audio/VIDEO
-    # modality triple (q188/q193's encode→parse round-trip recipe on
-    # box-tree walking: 16.16 fixed-point geometry, exact integer
-    # duration, layout quirks that must not change parsed values). Its
-    # slot comes from q186_ship_latency_by_priority (driver-green hash
-    # rows r10 through r12, code unchanged; the percentile/latency
-    # family keeps q184_conversion_latency in this prefix and the
-    # shared _ecdf machinery stays driver-exercised through q184 +
-    # q187; q186 stays exact-green on the local mirror at three SFs).
-    "q196_mp4_metadata_audit",
-    # ... and the per-source modality-readiness matrix — all three
-    # modality parsers (q188 JPEG, q193 WAV, q196 MP4) composed in one
-    # Arrow stage, rolled up per feed (decodable-image/audio/video doc
-    # counts, the all-three intersection, AV-duration alignment, total
-    # A/V duration mass — the pairing audit before multimodal
-    # training). Its slot comes from q185_dup_span_by_source (yield
-    # note above).
-    "q197_modality_readiness_by_source",
-    # ... and the embedding-dimension truncation-recall table (the
-    # Matryoshka-style eval that decides whether the ANN tier can run
-    # on 8/16/32-dim prefixes and cut index memory 2-8x at 10^9
-    # vectors — gridded-selection determinism per the q140/q164 rule,
-    # all four rankings oracle-mirrored in DuckDB list slices). Its
-    # slot comes from q187_revenue_pareto (yield note above).
-    "q198_dim_truncation_recall",
-    # ... and the ranked-retrieval metrics table (MRR + full-corpus-
-    # ideal nDCG@k over the dense arm, digest-graded relevance,
-    # pre-gridded log2 discounts so no engine evaluates a
-    # transcendental — the eval q146's set-recall doesn't give). Its
-    # slot comes from q181_cross_lingual_leakage (yield note above).
-    "q199_retrieval_metrics",
+    "q01_pricing_summary",                # C6 hash aggregation (headline)
+    "q02_filter_pushdown",                # C1 filter / pushdown
+    "q03_derived_projection",             # C2 derived projection
+    "q04_revenue_by_nation",              # C3 equi-join (star)
+    "q05_semi_join",                      # C4 semi join
+    "q07_theta_join",                     # C5 theta join
+    "q10_count_distinct",                 # C7 count-distinct
+    "q15_set_ops",                        # C11 set ops
+    "q16_string_funcs",                   # C12 string funcs
+    "q17_date_funcs",                     # C13 date funcs
+    "q18_math_funcs",                     # C14 math funcs
+    "q22_exact_dedup",                    # C16 exact dedup
+    "q25_from_json",                      # C15 JSON / struct funcs
+    "q28_udaf_weighted_avg",              # B8/C25 grouped-agg pandas UDF
+    "q30_topk_per_group",                 # C10 per-group top-k
+    "q35_grouping_sets",                  # C8 grouping sets
+    "q40_ngram_jaccard_pairs",            # C17 exact near-dup verifier
+    "q60_knn_bruteforce",                 # C18 exact similarity search
+    "q70_tumbling_window",                # C20 tumbling window
+    "q72_session_window",                 # C21 session window
+    "q73_stream_static_join",             # C23 stream-static join
+    "q80_binary_metadata",                # multimodal binary metadata
+    "q47_repetition_score",               # C19 text analysis
+    "q96_min_cost_supplier",              # C9 window functions
+    "q79_late_data_audit",                # C22 stateful / late data
+    "q98_arrow_digest",                   # C25 Arrow map tier
+    "q154_bm25_batch_retrieval",          # C19 BM25 retrieval
+    "q156_containment_pairs",             # C17 containment near-dup
+    "q160_column_profile",                # data-quality column profile
+    "q163_pps_token_sample",              # sampling (two-pass prefix sum)
+    "q165_cvm_drift",                     # data-quality drift
+    "q103_pagerank_top20",                # graph (recursive-CTE oracle)
+    "q140_mmr_diverse_topk",              # C18 diverse re-rank
+    "q175_line_repetition",               # C19 line-level repetition
+    "q180_filter_waterfall",              # C19 quality-filter waterfall
+    "q182_event_transitions",             # event behaviour (Markov chain)
+    "q183_cluster_density_audit",         # C17 cluster over-merge audit
+    "q184_conversion_latency",            # percentile / latency (_ecdf)
+    "q188_jpeg_metadata_audit",           # multimodal image
+    "q189_packing_waste",                 # training economics: padding
+    "q190_token_yield_ladder",            # C17 dedup token yield
+    "q191_split_leakage_audit",           # C17 cross-split leakage
+    "q192_packing_boundary_audit",        # training economics: splitting
+    "q193_wav_metadata_audit",            # multimodal audio
+    "q194_packing_policy",                # training economics: policy
+    "q195_audio_profile_by_source",       # multimodal × source profile
+    "q196_mp4_metadata_audit",            # multimodal video
+    "q197_modality_readiness_by_source",  # multimodal composition
+    "q198_dim_truncation_recall",         # C18 embedding truncation eval
+    "q199_retrieval_metrics",             # C18 ranked-retrieval metrics
 )
 
 

@@ -13,23 +13,18 @@ keys resolve under the options prefix without doubling (quirk 2.5.9).
 
 from __future__ import annotations
 
-from typing import Dict, Mapping, Optional, TYPE_CHECKING
+from typing import Dict
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from pyspark_streaming_base_spark.config import ConfigResolver
-from pyspark_streaming_base_spark.session import SessionFactory
-
-if TYPE_CHECKING:  # pragma: no cover
-    from pyspark_streaming_base_spark.app.streaming_app import StreamingApp
+from pyspark_streaming_base_spark.connector import Connector
 
 
-class StreamingSink:
+class StreamingSink(Connector):
     """Abstract config-driven streaming sink (reference A3/A17/A18/A19)."""
 
-    FORMAT: str = ""
-    DEFAULT_OPTIONS: Dict[str, str] = {}
+    CONFIG_PREFIX = "spark.app.sink"
 
     #: Writer-level (non-option) settings, resolved under ``{prefix}.{fmt}``:
     #: outputMode/queryName/trigger/partitionBy/clusterBy
@@ -46,50 +41,6 @@ class StreamingSink:
         "validate": "true",
     }
 
-    def __init__(
-        self,
-        config_prefix: str = "spark.app.sink",
-        config: Optional[Mapping[str, str]] = None,
-        app: Optional["StreamingApp"] = None,
-    ) -> None:
-        if not self.FORMAT:
-            raise NotImplementedError("subclass must set FORMAT")
-        self.app = app
-        self.config_prefix = f"{config_prefix}.{self.FORMAT}"
-        self.config_options_prefix = f"{self.config_prefix}.options"
-        cfg = dict(config or {})
-        opts, settings = {}, {}
-        merged_defaults = {**StreamingSink.DEFAULT_SETTINGS, **self.DEFAULT_SETTINGS}
-        for k, v in cfg.items():
-            if k.startswith(self.config_options_prefix + "."):
-                opts[k[len(self.config_options_prefix) + 1 :]] = v
-            elif k.startswith(self.config_prefix + "."):
-                settings[k[len(self.config_prefix) + 1 :]] = v
-            else:
-                (settings if k in merged_defaults else opts)[k] = v
-        self._options = ConfigResolver(
-            prefix=self.config_options_prefix,
-            defaults=self.DEFAULT_OPTIONS,
-            overrides=opts,
-        )
-        self._settings = ConfigResolver(
-            prefix=self.config_prefix,
-            defaults=merged_defaults,
-            overrides=settings,
-        )
-
-    # -- resolution --------------------------------------------------------
-
-    def resolved_options(self, session: Optional[SparkSession] = None) -> Dict[str, str]:
-        return self._options.resolve(session=session)
-
-    def setting(self, key: str, session: Optional[SparkSession] = None) -> Optional[str]:
-        return self._settings.get(key, session=session)
-
-    def with_option(self, key: str, value: str) -> "StreamingSink":
-        self._options.with_override(key, value)
-        return self
-
     # -- writer factory (A3) ----------------------------------------------
 
     def from_df(self, df: DataFrame) -> DataStreamWriter:
@@ -102,13 +53,9 @@ class StreamingSink:
         to the caller.
         """
         spark = df.sparkSession
-        writer = df.writeStream.options(**self.resolved_options(spark)).format(self.FORMAT)
-        mode = self.setting("outputMode", spark) or "append"
-        self._validate(df, mode)
-        writer = writer.outputMode(mode)
-        qname = self.setting("queryName", spark)
-        if qname:
-            writer = writer.queryName(qname)
+        writer = self._mode_and_name(
+            df, df.writeStream.options(**self.resolved_options(spark)).format(self.FORMAT)
+        )
         pby = self.setting("partitionBy", spark)
         if pby:
             writer = writer.partitionBy(*[c.strip() for c in pby.split(",") if c.strip()])
@@ -116,6 +63,15 @@ class StreamingSink:
         if cby:
             writer = writer.clusterBy(*[c.strip() for c in cby.split(",") if c.strip()])
         return writer
+
+    def _mode_and_name(self, df: DataFrame, writer: DataStreamWriter) -> DataStreamWriter:
+        """Validate ``df`` against the configured output mode, then apply
+        outputMode and (when set) queryName to ``writer``."""
+        mode = self.setting("outputMode", df.sparkSession) or "append"
+        self._validate(df, mode)
+        writer = writer.outputMode(mode)
+        qname = self.setting("queryName", df.sparkSession)
+        return writer.queryName(qname) if qname else writer
 
     def _validate(self, df: DataFrame, mode: str) -> None:
         """Pre-flight legality check (good errors at wiring time instead of
@@ -144,10 +100,3 @@ class StreamingSink:
         if path:
             return writer.start(path)
         return writer.start()
-
-    def _session(self, session: Optional[SparkSession]) -> SparkSession:
-        if session is not None:
-            return session
-        if self.app is not None:
-            return self.app.spark
-        return SessionFactory.get_or_active()

@@ -18,15 +18,15 @@ high-frequency micro-batches — without them a 1-second trigger writes
 
 from __future__ import annotations
 
-from typing import Dict, Optional
+from typing import Dict
 
-from pyspark.sql import SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from pyspark_streaming_base_spark.connector import ManagedTable
 from pyspark_streaming_base_spark.sinks.base import StreamingSink
 
 
-class DeltaStreamingSink(StreamingSink):
+class DeltaStreamingSink(ManagedTable, StreamingSink):
     FORMAT = "delta"
 
     DEFAULT_OPTIONS: Dict[str, str] = {
@@ -41,27 +41,9 @@ class DeltaStreamingSink(StreamingSink):
     }
 
     DEFAULT_SETTINGS: Dict[str, str] = {
-        "catalog": "",
-        "databaseOrSchema": "",
-        "tableName": "",
         "txnAppId": "",
         "userMetadata": "",
     }
-
-    def table_name(self, session: Optional[SparkSession] = None) -> str:
-        parts = [
-            self.setting("catalog", session),
-            self.setting("databaseOrSchema", session),
-            self.setting("tableName", session),
-        ]
-        joined = ".".join(p for p in parts if p)
-        if not joined:
-            raise ValueError(f"no table name parts configured under {self.config_prefix}")
-        return joined
-
-    @staticmethod
-    def is_managed(name: str) -> bool:
-        return "." in name
 
     def execute(self, writer: DataStreamWriter) -> StreamingQuery:
         """Start to path or managed table (implements reference stub A19,

@@ -51,7 +51,7 @@ class IdempotentForeachBatchSink(StreamingSink):
 
     def __init__(
         self,
-        config_prefix: str = "spark.app.sink",
+        config_prefix: Optional[str] = None,
         config=None,
         app=None,
         batch_fn: Optional[BatchFn] = None,
@@ -134,15 +134,8 @@ class IdempotentForeachBatchSink(StreamingSink):
     # -- writer ------------------------------------------------------------
 
     def from_df(self, df: DataFrame) -> DataStreamWriter:
-        spark = df.sparkSession
-        writer = df.writeStream.foreachBatch(self.batch_fn())
-        mode = self.setting("outputMode", spark) or "append"
-        self._validate(df, mode)
-        writer = writer.outputMode(mode)
-        qname = self.setting("queryName", spark)
-        if qname:
-            writer = writer.queryName(qname)
-        return writer
+        # no options, format or layout: the batch function owns the write
+        return self._mode_and_name(df, df.writeStream.foreachBatch(self.batch_fn()))
 
     fromDF = from_df
 

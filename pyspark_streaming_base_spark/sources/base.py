@@ -5,94 +5,30 @@ Reference parity: ``StreamingSource``
 operators A1/A4/A5). A source is configuration that knows how to produce a
 ``spark.readStream`` reader:
 
-* ``config_prefix`` → dotted namespace (``spark.app.source``) composed with
-  the format (``{prefix}.{fmt}``) and an options sub-namespace
-  (``{prefix}.{fmt}.options``) — same composition as the reference
-  (``sources/streaming_source.py:76-80``);
-* three-tier option resolution via :class:`ConfigResolver` (defaults →
-  RuntimeConf → direct dict), per-instance (fixes quirk 2.5.1), prefix-
-  respecting for every key (fixes 2.5.5);
+* ``config_prefix`` (default ``spark.app.source``) → the ``{prefix}.{fmt}``
+  settings and ``{prefix}.{fmt}.options`` option namespaces with
+  three-tier resolution (shared :class:`~..connector.Connector` plumbing,
+  same composition as ``sources/streaming_source.py:76-80``);
 * ``generate(session)`` → ``spark.readStream.options(**opts).format(fmt)``
-  (``sources/streaming_source.py:51``).
+  (``sources/streaming_source.py:51``);
+* ``load(session)`` → the bound streaming DataFrame (bare ``.load()``
+  unless a subclass binds a path or table).
 """
 
 from __future__ import annotations
 
-from typing import Dict, Mapping, Optional, TYPE_CHECKING
+from typing import Optional
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamReader
 
-from pyspark_streaming_base_spark.config import ConfigResolver
-from pyspark_streaming_base_spark.session import SessionFactory
-
-if TYPE_CHECKING:  # pragma: no cover
-    from pyspark_streaming_base_spark.app.streaming_app import StreamingApp
+from pyspark_streaming_base_spark.connector import Connector
 
 
-class StreamingSource:
+class StreamingSource(Connector):
     """Abstract config-driven streaming source (reference A1/A4/A5)."""
 
-    #: Spark datasource format name; subclasses override.
-    FORMAT: str = ""
-
-    #: Per-format default *reader options* (string map). Subclasses override.
-    #: Copied per instance by ConfigResolver — never mutated class-level.
-    DEFAULT_OPTIONS: Dict[str, str] = {}
-
-    #: Default non-option settings (e.g. table coordinates), resolved under
-    #: ``{config_prefix}.{fmt}`` rather than ``...options``.
-    DEFAULT_SETTINGS: Dict[str, str] = {}
-
-    def __init__(
-        self,
-        config_prefix: str = "spark.app.source",
-        config: Optional[Mapping[str, str]] = None,
-        app: Optional["StreamingApp"] = None,
-    ) -> None:
-        if not self.FORMAT:
-            raise NotImplementedError("subclass must set FORMAT")
-        self.app = app
-        self.config_prefix = f"{config_prefix}.{self.FORMAT}"
-        self.config_options_prefix = f"{self.config_prefix}.options"
-        cfg = dict(config or {})
-        # Direct-dict config may address either namespace with full keys;
-        # bare keys are treated as option names (reference behavior:
-        # defaults dicts use bare option names).
-        opts = {}
-        settings = {}
-        for k, v in cfg.items():
-            if k.startswith(self.config_options_prefix + "."):
-                opts[k[len(self.config_options_prefix) + 1 :]] = v
-            elif k.startswith(self.config_prefix + "."):
-                settings[k[len(self.config_prefix) + 1 :]] = v
-            else:
-                (settings if k in self.DEFAULT_SETTINGS else opts)[k] = v
-        self._options = ConfigResolver(
-            prefix=self.config_options_prefix,
-            defaults=self.DEFAULT_OPTIONS,
-            overrides=opts,
-        )
-        self._settings = ConfigResolver(
-            prefix=self.config_prefix,
-            defaults=self.DEFAULT_SETTINGS,
-            overrides=settings,
-        )
-
-    # -- resolution --------------------------------------------------------
-
-    def resolved_options(self, session: Optional[SparkSession] = None) -> Dict[str, str]:
-        """Final reader options dict (A5 projection, all three tiers)."""
-        return self._options.resolve(session=session)
-
-    def setting(self, key: str, session: Optional[SparkSession] = None) -> Optional[str]:
-        return self._settings.get(key, session=session)
-
-    def with_option(self, key: str, value: str) -> "StreamingSource":
-        self._options.with_override(key, value)
-        return self
-
-    # -- reader factory (A1) ----------------------------------------------
+    CONFIG_PREFIX = "spark.app.source"
 
     def generate(self, session: Optional[SparkSession] = None) -> DataStreamReader:
         """Build the configured ``DataStreamReader``.
@@ -105,9 +41,6 @@ class StreamingSource:
         opts = self.resolved_options(spark)
         return spark.readStream.options(**opts).format(self.FORMAT)
 
-    def _session(self, session: Optional[SparkSession]) -> SparkSession:
-        if session is not None:
-            return session
-        if self.app is not None:
-            return self.app.spark
-        return SessionFactory.get_or_active()
+    def load(self, session: Optional[SparkSession] = None) -> DataFrame:
+        """Bind the reader (Kafka-style sources load bare)."""
+        return self.generate(session).load()

@@ -27,10 +27,11 @@ from typing import Dict, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamReader
 
+from pyspark_streaming_base_spark.connector import ManagedTable
 from pyspark_streaming_base_spark.sources.base import StreamingSource
 
 
-class DeltaStreamingSource(StreamingSource):
+class DeltaStreamingSource(ManagedTable, StreamingSource):
     FORMAT = "delta"
 
     DEFAULT_OPTIONS: Dict[str, str] = {
@@ -45,34 +46,9 @@ class DeltaStreamingSource(StreamingSource):
     }
 
     DEFAULT_SETTINGS: Dict[str, str] = {
-        "catalog": "",
-        "databaseOrSchema": "",
-        "tableName": "",
         "path": "",
         "startingVersion": "",
     }
-
-    # -- managed-table name resolution (A10) ------------------------------
-
-    def table_name(self, session: Optional[SparkSession] = None) -> str:
-        """Join ``catalog.databaseOrSchema.tableName`` parts; ValueError if
-        all empty (reference ``delta_source.py:63-89``)."""
-        parts = [
-            self.setting("catalog", session),
-            self.setting("databaseOrSchema", session),
-            self.setting("tableName", session),
-        ]
-        joined = ".".join(p for p in parts if p)
-        if not joined:
-            raise ValueError(
-                f"no table name parts configured under {self.config_prefix}"
-            )
-        return joined
-
-    @staticmethod
-    def is_managed(name: str) -> bool:
-        """Managed ⇔ multi-part dotted name (reference ``delta_source.py:78-89``)."""
-        return "." in name
 
     # -- reader factory ---------------------------------------------------
 

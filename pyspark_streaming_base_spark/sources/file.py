@@ -36,7 +36,7 @@ class FileStreamingSource(StreamingSource):
         "format": "parquet",  # parquet | json | csv | text
     }
 
-    def __init__(self, config_prefix="spark.app.source", config=None, app=None, schema: Optional[StructType] = None):
+    def __init__(self, config_prefix=None, config=None, app=None, schema: Optional[StructType] = None):
         super().__init__(config_prefix=config_prefix, config=config, app=app)
         self.schema = schema
 
