@@ -1,7 +1,7 @@
 # Developer entry points. All gates run on the preinstalled toolchain —
 # no network access assumed.
 
-.PHONY: test test-full correctness correctness-sf01 bench lint plan-lint plans install smoke scale-smoke
+.PHONY: test test-full correctness correctness-sf01 bench lint plan-lint plans install smoke scale-smoke loc
 
 test:
 	# default tier: slow soak/property/e2e tests excluded (pyproject
@@ -29,6 +29,11 @@ bench:
 lint:
 	@command -v ruff >/dev/null 2>&1 && ruff check pyspark_streaming_base_spark tests tools \
 		|| echo "ruff not installed; skipping"
+
+# code lines as ROADMAP.md and CHANGES.md quote them (tokenizer count,
+# comments and docstrings excluded): the package and bench.py
+loc:
+	@python tools/code_lines.py
 
 plan-lint:
 	python tools/lint_plans.py

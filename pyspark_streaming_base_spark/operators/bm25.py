@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_streaming_base_spark.functions.textops import tokens
+from pyspark_streaming_base_spark.operators import tombstones
 
 #: Okapi defaults — shared with q136's oracle SQL (queries/text.py).
 K1 = 1.2
@@ -147,20 +148,13 @@ def build_bm25_index(
     previous index at ``path`` left behind — a build defines the corpus,
     so stale deletes must not shadow freshly indexed ids (the
     family-wide fresh-build contract)."""
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        clear_tombstones,
-        reset_live,
-    )
-
-    reset_live(f"{path}/postings")
-    reset_live(f"{path}/doclens")
+    tombstones.reset_for_build(_tables(path, id_col))
     bm25_postings(docs, id_col, text_col).write.mode("overwrite").parquet(
         f"{path}/postings"
     )
     bm25_doclens(docs, id_col, text_col).write.mode("overwrite").parquet(
         f"{path}/doclens"
     )
-    clear_tombstones(f"{path}/tombstones")
 
 
 def append_bm25_index(
@@ -170,10 +164,8 @@ def append_bm25_index(
     statistics (N, avgdl, df) self-update because probes always compute
     them from the tables. Callers must not append an id twice (the same
     id-uniqueness contract as every index in this family)."""
-    from pyspark_streaming_base_spark.operators.tombstones import append_live
-
-    append_live(bm25_postings(new_docs, id_col, text_col), f"{path}/postings")
-    append_live(bm25_doclens(new_docs, id_col, text_col), f"{path}/doclens")
+    tombstones.append_live(bm25_postings(new_docs, id_col, text_col), f"{path}/postings")
+    tombstones.append_live(bm25_doclens(new_docs, id_col, text_col), f"{path}/doclens")
 
 
 def query_bm25_index(
@@ -255,16 +247,30 @@ def bm25_score_query_table(
 # ---------------------------------------------------------------------------
 #
 # Appends alone can't serve a production corpus — takedowns, dedup
-# removals, and re-crawls all DELETE documents. The pattern (the template
-# for the whole persisted-index family): deletes are O(delete-batch)
-# TOMBSTONE appends at `path/tombstones`; probes anti-join the live
-# tables against them, and because N/avgdl/df are always derived from the
-# (now filtered) tables at probe time, the statistics self-correct — a
-# deleted doc leaves the corpus AND the idf denominator in the same
-# operation. Compaction rewrites the tables minus tombstones when the
-# tombstone set has grown enough to matter; until then a probe pays one
-# anti-join against a (usually broadcast-sized) id list. Same
-# single-writer maintenance contract as the append paths.
+# removals, and re-crawls all DELETE documents. Every persisted-index
+# family runs the same lifecycle, written once in operators/tombstones.py
+# and driven by the family's `_tables` declaration (an `IndexTables`):
+# deletes are O(delete-batch) TOMBSTONE appends at `path/tombstones`;
+# probes anti-join the live tables against them, and because
+# N/avgdl/df are always derived from the (now filtered) tables at probe
+# time, the statistics self-correct — a deleted doc leaves the corpus
+# AND the idf denominator in the same operation. Compaction rewrites
+# the live tables minus tombstones (staged swap) when the tombstone set
+# has grown enough to matter; until then a probe pays one anti-join
+# against a (usually broadcast-sized) id list. A build resets every
+# declared table and clears the tombstones. Same single-writer
+# maintenance contract as the append paths.
+
+
+def _tables(path: str, id_col: str) -> tombstones.IndexTables:
+    """Live ``postings`` and ``doclens``; the ratio check runs against
+    doclens (one row per doc, like the tombstones)."""
+    return tombstones.IndexTables(
+        tombstones=f"{path}/tombstones",
+        id_col=id_col,
+        live=(f"{path}/postings", f"{path}/doclens"),
+        ratio_basis=f"{path}/doclens",
+    )
 
 
 def delete_from_bm25_index(
@@ -282,19 +288,7 @@ def delete_from_bm25_index(
     docs — the delete call becomes the compaction scheduler, so an
     operator who never runs maintenance still never degrades past the
     ratio."""
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        maybe_compact,
-        write_tombstones,
-    )
-
-    write_tombstones(spark, f"{path}/tombstones", ids, id_col)
-    if compact_ratio is not None:
-        maybe_compact(
-            f"{path}/tombstones",
-            f"{path}/doclens",
-            lambda: compact_bm25_index(spark, path, id_col),
-            ratio=compact_ratio,
-        )
+    tombstones.delete(spark, _tables(path, id_col), ids, compact_ratio)
 
 
 def load_bm25_index(
@@ -303,18 +297,8 @@ def load_bm25_index(
     """The LIVE ``(postings, doclens)`` view: tombstoned docs removed
     from both tables, so every derived statistic (N, avgdl, df) reflects
     the post-delete corpus. All probe entry points read through here.
-    Both tables share one tombstone read, and the compaction-ratio check
-    runs once against doclens (one row per doc, like the tombstones)."""
-    from pyspark_streaming_base_spark.operators.tombstones import load_live_view
-
-    postings, doclens = load_live_view(
-        spark,
-        f"{path}/tombstones",
-        id_col,
-        live=[f"{path}/postings", f"{path}/doclens"],
-        ratio_basis=f"{path}/doclens",
-    )
-    return postings, doclens
+    Both tables share one tombstone read."""
+    return tuple(tombstones.load_live_view(spark, _tables(path, id_col)))
 
 
 def compact_bm25_index(
@@ -325,15 +309,7 @@ def compact_bm25_index(
     tombstone list has grown past broadcast size (until then probes pay
     one cheap anti-join). Staged-swap per table via
     ``operators/tombstones.py::swap_in`` — crash-safe, single-writer."""
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        clear_tombstones,
-        swap_in,
-    )
-
-    postings, doclens = load_bm25_index(spark, path, id_col)
-    swap_in(f"{path}/postings", postings)
-    swap_in(f"{path}/doclens", doclens)
-    clear_tombstones(f"{path}/tombstones")
+    tombstones.compact(spark, _tables(path, id_col))
 
 
 def query_bm25_index_table(

@@ -41,8 +41,10 @@ Tables under ``<path>/``:
 
 Lifecycle = the shared ``operators/tombstones.py`` contract: O(batch)
 appends, tombstone deletes, ratio-triggered compaction with the
-generation-pointer staged swap (hive layout preserved via
-``swap_in(partition_by=("slice",))``).
+generation-pointer staged swap (hive layout preserved by the
+``partition_by=("slice",)`` of its ``IndexTables``). The one
+family-specific step is the ``df`` table: a build resets it, and
+compaction rebuilds it from the compacted postings.
 """
 
 from __future__ import annotations
@@ -51,14 +53,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark_streaming_base_spark.functions.textops import tokens, word_shingles
-from pyspark_streaming_base_spark.operators.tombstones import (
-    append_live,
-    clear_tombstones,
-    load_live_view,
-    read_live,
-    swap_in,
-    write_tombstones,
-)
+from pyspark_streaming_base_spark.operators import tombstones
 
 __all__ = [
     "build_containment_index",
@@ -119,20 +114,17 @@ def build_containment_index(
     previous index at the same location are cleared, so rebuilding over
     a previously-deleted-from path can't silently drop freshly indexed
     docs whose ids happen to match old tombstones (the family-wide
-    fresh-build contract — every ``build_*_index`` does this)."""
-    from pyspark_streaming_base_spark.operators.tombstones import reset_live
-
-    for table in ("sets", "postings", "df"):
-        reset_live(f"{path}/{table}")
+    fresh-build contract — every ``build_*_index`` does this). The
+    reset covers ``df`` too: compaction swaps it behind a pointer."""
+    tombstones.reset_for_build(_tables(path))
     sets = shingle_sets(docs, id_col, text_col, lang_col)
     sets.write.mode("overwrite").partitionBy("slice").parquet(f"{path}/sets")
     spark = docs.sparkSession
-    posts = _postings(read_live(spark, f"{path}/sets"))
+    posts = _postings(tombstones.read_live(spark, f"{path}/sets"))
     posts.write.mode("overwrite").partitionBy("slice").parquet(f"{path}/postings")
-    _df_table(read_live(spark, f"{path}/postings")).write.mode("overwrite").parquet(
-        f"{path}/df"
-    )
-    clear_tombstones(f"{path}/tombstones")
+    _df_table(tombstones.read_live(spark, f"{path}/postings")).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/df")
 
 
 def append_containment_index(
@@ -154,35 +146,37 @@ def append_containment_index(
     against the live sets table (O(corpus ids), so opt-in; see
     ``tombstones.assert_ids_absent``)."""
     if assert_unique:
-        from pyspark_streaming_base_spark.operators.tombstones import (
-            assert_ids_absent,
-        )
-
         # the persisted sets table stores the id as doc_id regardless of
         # the caller's id_col
-        assert_ids_absent(
+        tombstones.assert_ids_absent(
             f"{path}/sets",
             new_docs.select(F.col(id_col).alias("doc_id")),
             "doc_id",
         )
     sets = shingle_sets(new_docs, id_col, text_col, lang_col)
-    append_live(sets, f"{path}/sets", partition_by=("slice",))
-    append_live(_postings(sets), f"{path}/postings", partition_by=("slice",))
+    tombstones.append_live(sets, f"{path}/sets", partition_by=("slice",))
+    tombstones.append_live(_postings(sets), f"{path}/postings", partition_by=("slice",))
+
+
+def _tables(path: str) -> tombstones.IndexTables:
+    """Live ``sets`` and ``postings`` (slice-partitioned, a layout
+    compaction keeps); ``df`` is read as written. The compaction-ratio
+    check compares against the one-row-per-doc sets table (postings
+    rows inflate both sides of the ratio identically only when doc
+    sizes are even)."""
+    return tombstones.IndexTables(
+        tombstones=f"{path}/tombstones",
+        id_col="doc_id",
+        live=(f"{path}/sets", f"{path}/postings"),
+        frozen=(f"{path}/df",),
+        ratio_basis=f"{path}/sets",
+        partition_by=("slice",),
+    )
 
 
 def _load(spark: SparkSession, path: str) -> list:
-    """``[live sets, live postings, df]`` through the shared loader. The
-    compaction-ratio check compares against the one-row-per-doc sets
-    table (postings rows inflate both sides of the ratio identically
-    only when doc sizes are even)."""
-    return load_live_view(
-        spark,
-        f"{path}/tombstones",
-        "doc_id",
-        live=[f"{path}/sets", f"{path}/postings"],
-        frozen=[f"{path}/df"],
-        ratio_basis=f"{path}/sets",
-    )
+    """``[live sets, live postings, df]`` through the shared loader."""
+    return tombstones.load_live_view(spark, _tables(path))
 
 
 def _probe_side(sets: DataFrame) -> DataFrame:
@@ -312,26 +306,22 @@ def delete_from_containment_index(
     either side. Set semantics; shared contract in
     ``operators/tombstones.py``. ``compact_ratio`` opts into the
     delete-time auto-compaction hook (the bm25 convention)."""
-    from pyspark_streaming_base_spark.operators.tombstones import maybe_compact
-
-    write_tombstones(spark, f"{path}/tombstones", ids, "doc_id")
-    if compact_ratio is not None:
-        maybe_compact(
-            f"{path}/tombstones",
-            f"{path}/sets",
-            lambda: compact_containment_index(spark, path),
-            ratio=compact_ratio,
-        )
+    if tombstones.delete(spark, _tables(path), ids, compact_ratio):
+        _refresh_df(spark, path)
 
 
 def compact_containment_index(spark: SparkSession, path: str) -> None:
     """Fold tombstones into sets + postings (generation-pointer staged
-    swaps, slice layout preserved), rebuild the df ordering table from
-    the live postings, clear the tombstone set."""
-    live_sets, live_posts, _df = _load(spark, path)
-    swap_in(f"{path}/sets", live_sets, partition_by=("slice",))
-    swap_in(f"{path}/postings", live_posts, partition_by=("slice",))
-    # postings now resolves to the compacted generation — rebuild df
-    # from it (swap_in materializes before flipping, so this is safe)
-    swap_in(f"{path}/df", _df_table(read_live(spark, f"{path}/postings")))
-    clear_tombstones(f"{path}/tombstones")
+    swaps, slice layout preserved) and clear the tombstone set, then
+    rebuild the df ordering table from the compacted postings."""
+    tombstones.compact(spark, _tables(path))
+    _refresh_df(spark, path)
+
+
+def _refresh_df(spark: SparkSession, path: str) -> None:
+    """Rebuild the df ordering table after a compaction: postings now
+    resolves to the compacted generation (swap_in materializes before
+    flipping), so df is computed from it."""
+    tombstones.swap_in(
+        f"{path}/df", _df_table(tombstones.read_live(spark, f"{path}/postings"))
+    )

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from pyspark_streaming_base_spark.functions.vectorops import cosine, dvec
+from pyspark_streaming_base_spark.operators import tombstones
 
 
 def ivf_assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
@@ -97,15 +98,9 @@ def build_ivf_index(
     # a build defines the corpus: tear down any pointer layout from a
     # previous index at this path, and clear its stale tombstones so
     # they can't shadow freshly indexed ids (family contract)
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        clear_tombstones,
-        reset_live,
-    )
-
-    reset_live(f"{path}/assignments")
+    tombstones.reset_for_build(_tables(path))
     centroids.write.mode("overwrite").parquet(f"{path}/centroids")
     ivf_assign(emb, centroids).write.mode("overwrite").parquet(f"{path}/assignments")
-    clear_tombstones(f"{path}/tombstones")
 
 
 def append_ivf_index(spark: SparkSession, path: str, new_emb: DataFrame) -> None:
@@ -116,10 +111,8 @@ def append_ivf_index(spark: SparkSession, path: str, new_emb: DataFrame) -> None
     + rebuild when the vector distribution drifts). Existing rows are
     untouched, so append == build-on-union under pinned centroids row
     for row. Callers must not append a vec_id twice."""
-    from pyspark_streaming_base_spark.operators.tombstones import append_live
-
     centroids = spark.read.parquet(f"{path}/centroids")
-    append_live(ivf_assign(new_emb, centroids), f"{path}/assignments")
+    tombstones.append_live(ivf_assign(new_emb, centroids), f"{path}/assignments")
 
 
 def query_ivf_index(
@@ -135,18 +128,20 @@ def query_ivf_index(
     return ivf_search(queries, centroids, assigned, nprobe, top_k)
 
 
-def _load_ivf_index(spark: SparkSession, path: str) -> list:
-    """``[live assignments, centroids]`` for the probe paths."""
-    from pyspark_streaming_base_spark.operators.tombstones import load_live_view
-
-    return load_live_view(
-        spark,
-        f"{path}/tombstones",
-        "vec_id",
-        live=[f"{path}/assignments"],
-        frozen=[f"{path}/centroids"],
+def _tables(path: str) -> tombstones.IndexTables:
+    """Live ``assignments``; the coarse quantizer is frozen."""
+    return tombstones.IndexTables(
+        tombstones=f"{path}/tombstones",
+        id_col="vec_id",
+        live=(f"{path}/assignments",),
+        frozen=(f"{path}/centroids",),
         ratio_basis=f"{path}/assignments",
     )
+
+
+def _load_ivf_index(spark: SparkSession, path: str) -> list:
+    """``[live assignments, centroids]`` for the probe paths."""
+    return tombstones.load_live_view(spark, _tables(path))
 
 
 def delete_from_ivf_index(
@@ -157,35 +152,13 @@ def delete_from_ivf_index(
     frozen quantizer is untouched (deletes don't retrain, exactly like
     appends don't). ``compact_ratio`` opts into the delete-time
     auto-compaction hook (the bm25 convention)."""
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        maybe_compact,
-        write_tombstones,
-    )
-
-    write_tombstones(spark, f"{path}/tombstones", ids, "vec_id")
-    if compact_ratio is not None:
-        maybe_compact(
-            f"{path}/tombstones",
-            f"{path}/assignments",
-            lambda: compact_ivf_index(spark, path),
-            ratio=compact_ratio,
-        )
+    tombstones.delete(spark, _tables(path), ids, compact_ratio)
 
 
 def compact_ivf_index(spark: SparkSession, path: str) -> None:
     """Fold tombstones into the assignments table (staged-swap) and
     clear them."""
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        clear_tombstones,
-        load_live_view,
-        swap_in,
-    )
-
-    (live,) = load_live_view(
-        spark, f"{path}/tombstones", "vec_id", live=[f"{path}/assignments"]
-    )
-    swap_in(f"{path}/assignments", live)
-    clear_tombstones(f"{path}/tombstones")
+    tombstones.compact(spark, _tables(path))
 
 
 def tune_nprobe(

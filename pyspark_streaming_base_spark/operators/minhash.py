@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_streaming_base_spark.functions.textops import word_shingles
+from pyspark_streaming_base_spark.operators import tombstones
 
 #: Signature geometry shared by every consumer (16 = 4 bands × 4 rows).
 N_PERM = 16
@@ -86,14 +87,8 @@ def build_minhash_index(
     Clears any tombstones a previous index at ``path`` left behind — a
     build defines the corpus, so stale deletes must not shadow freshly
     indexed ids (the family-wide fresh-build contract)."""
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        clear_tombstones,
-        reset_live,
-    )
-
-    reset_live(path)
+    tombstones.reset_for_build(_tables(path, id_col))
     minhash_bands(docs, id_col, text_col).write.mode("overwrite").parquet(path)
-    clear_tombstones(f"{path}.tombstones")
 
 
 def append_minhash_index(
@@ -109,9 +104,7 @@ def append_minhash_index(
     corpus) → ``merge_components`` (clusters absorb the new edges) — each
     step O(batch), never O(corpus). Callers must not append an id twice
     (the same contract as the build input's id uniqueness)."""
-    from pyspark_streaming_base_spark.operators.tombstones import append_live
-
-    append_live(minhash_bands(new_docs, id_col, text_col), path)
+    tombstones.append_live(minhash_bands(new_docs, id_col, text_col), path)
 
 
 def query_minhash_index(
@@ -171,7 +164,7 @@ def index_band_pairs(index: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Deletes + compaction (same lifecycle template as operators/bm25.py)
+# Deletes + compaction (the shared lifecycle in operators/tombstones.py)
 # ---------------------------------------------------------------------------
 #
 # Dedup removals, takedowns, and re-crawls DELETE documents from the
@@ -182,6 +175,16 @@ def index_band_pairs(index: DataFrame, id_col: str = "doc_id") -> DataFrame:
 # against the tombstone set; compaction folds tombstones into a rewrite.
 
 
+def _tables(path: str, id_col: str) -> tombstones.IndexTables:
+    """One live table, the signatures at ``path`` itself."""
+    return tombstones.IndexTables(
+        tombstones=f"{path}.tombstones",
+        id_col=id_col,
+        live=(path,),
+        ratio_basis=path,
+    )
+
+
 def delete_from_minhash_index(
     spark: SparkSession, path: str, ids, id_col: str = "doc_id",
     compact_ratio: float = None,
@@ -190,19 +193,7 @@ def delete_from_minhash_index(
     semantics; shared contract in ``operators/tombstones.py``.
     ``compact_ratio`` opts into the delete-time auto-compaction hook
     (the bm25 convention)."""
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        maybe_compact,
-        write_tombstones,
-    )
-
-    write_tombstones(spark, f"{path}.tombstones", ids, id_col)
-    if compact_ratio is not None:
-        maybe_compact(
-            f"{path}.tombstones",
-            path,
-            lambda: compact_minhash_index(spark, path, id_col),
-            ratio=compact_ratio,
-        )
+    tombstones.delete(spark, _tables(path, id_col), ids, compact_ratio)
 
 
 def load_minhash_index(
@@ -211,12 +202,7 @@ def load_minhash_index(
     """The LIVE signature table: tombstoned ids excluded. Probe and
     rebuild paths read through here so deleted docs can neither emit nor
     receive candidates."""
-    from pyspark_streaming_base_spark.operators.tombstones import load_live_view
-
-    (live,) = load_live_view(
-        spark, f"{path}.tombstones", id_col, live=[path], ratio_basis=path
-    )
-    return live
+    return tombstones.load_live_view(spark, _tables(path, id_col))[0]
 
 
 def compact_minhash_index(
@@ -224,10 +210,4 @@ def compact_minhash_index(
 ) -> None:
     """Rewrite the signature table minus tombstones and clear them —
     staged-swap via ``operators/tombstones.py::swap_in``."""
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        clear_tombstones,
-        swap_in,
-    )
-
-    swap_in(path, load_minhash_index(spark, path, id_col))
-    clear_tombstones(f"{path}.tombstones")
+    tombstones.compact(spark, _tables(path, id_col))

@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from pyspark_streaming_base_spark.functions.vectorops import l2sq
+from pyspark_streaming_base_spark.operators import tombstones
 from pyspark_streaming_base_spark.operators.spread import spread
 
 __all__ = [
@@ -580,6 +581,18 @@ def _adc_shortlist(cand: DataFrame, shortlist: int) -> DataFrame:
     )
 
 
+def _tables(path: str) -> tombstones.IndexTables:
+    """The one pre-joined ``index`` table is live; codebooks and coarse
+    centroids are frozen."""
+    return tombstones.IndexTables(
+        tombstones=f"{path}/tombstones",
+        id_col="vec_id",
+        live=(f"{path}/index",),
+        frozen=(f"{path}/codebooks", f"{path}/centroids"),
+        ratio_basis=f"{path}/index",
+    )
+
+
 def build_pq_index(
     emb: DataFrame,
     path: str,
@@ -646,10 +659,9 @@ def build_pq_index(
             .select(F.col("vec_id").alias("cent_id"), F.col("vec").alias("cvec"))
         )
     # a build defines the corpus: tear down any pointer layout a
-    # previous compaction left at the swapped table (family contract)
-    from pyspark_streaming_base_spark.operators.tombstones import reset_live
-
-    reset_live(f"{path}/index")
+    # previous compaction left, and clear stale tombstones so they
+    # can't shadow freshly indexed ids (family contract)
+    tombstones.reset_for_build(_tables(path))
     cb = (
         codebooks
         if codebooks is not None
@@ -681,11 +693,6 @@ def build_pq_index(
         .write.mode("overwrite")
         .parquet(f"{path}/index")
     )
-    # a build defines the corpus: stale tombstones from a previous index
-    # at this path must not shadow freshly indexed ids (family contract)
-    from pyspark_streaming_base_spark.operators.tombstones import clear_tombstones
-
-    clear_tombstones(f"{path}/tombstones")
 
 
 def append_pq_index(spark, path: str, new_emb: DataFrame, m: int) -> None:
@@ -704,11 +711,9 @@ def append_pq_index(spark, path: str, new_emb: DataFrame, m: int) -> None:
 
     cb = spark.read.parquet(f"{path}/codebooks")
     centroids = spark.read.parquet(f"{path}/centroids")
-    from pyspark_streaming_base_spark.operators.tombstones import append_live
-
     # same fused single-pass shape as build_pq_index (r13): assignment
     # and encoding are projections, the batch is scanned once
-    append_live(
+    tombstones.append_live(
         ivf_assign(spread(new_emb, "vec_id"), centroids)
         .join(F.broadcast(_cb_entries_row(cb)))
         .select(
@@ -736,16 +741,7 @@ def query_pq_index(
     full-precision vectors for the re-rank) comes from the ONE
     pre-joined ``index`` table; the source corpus is never read.
     """
-    from pyspark_streaming_base_spark.operators.tombstones import load_live_view
-
-    index, codebooks, centroids = load_live_view(
-        spark,
-        f"{path}/tombstones",
-        "vec_id",
-        live=[f"{path}/index"],
-        frozen=[f"{path}/codebooks", f"{path}/centroids"],
-        ratio_basis=f"{path}/index",
-    )
+    index, codebooks, centroids = tombstones.load_live_view(spark, _tables(path))
 
     probes = _quantizer_plan(queries, centroids, codebooks, m, nprobe)
     # the pruned compressed scan reads (vec_id, cell, codes) straight off
@@ -768,30 +764,10 @@ def delete_from_pq_index(spark, path: str, ids, compact_ratio: float = None) -> 
     frozen artifacts and untouched. Shared contract:
     ``operators/tombstones.py``. ``compact_ratio`` opts into the
     delete-time auto-compaction hook (the bm25 convention)."""
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        maybe_compact,
-        write_tombstones,
-    )
-
-    write_tombstones(spark, f"{path}/tombstones", ids, "vec_id")
-    if compact_ratio is not None:
-        maybe_compact(
-            f"{path}/tombstones",
-            f"{path}/index",
-            lambda: compact_pq_index(spark, path),
-            ratio=compact_ratio,
-        )
+    tombstones.delete(spark, _tables(path), ids, compact_ratio)
 
 
 def compact_pq_index(spark, path: str) -> None:
     """Fold tombstones into the ``index`` table (staged-swap), clear
     them."""
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        clear_tombstones,
-        load_live_view,
-        swap_in,
-    )
-
-    (live,) = load_live_view(spark, f"{path}/tombstones", "vec_id", live=[f"{path}/index"])
-    swap_in(f"{path}/index", live)
-    clear_tombstones(f"{path}/tombstones")
+    tombstones.compact(spark, _tables(path))

@@ -58,6 +58,7 @@ from pyspark_streaming_base_spark.functions.vectorops import (
     l2sq,
     plane_component,
 )
+from pyspark_streaming_base_spark.operators import tombstones
 from pyspark_streaming_base_spark.queries._exact import dround
 
 __all__ = [
@@ -306,20 +307,15 @@ def build_semdedup_index(emb: DataFrame, path: str, centroids: DataFrame) -> Non
         # under-population lesson, applied to the caller-supplied table);
         # one tiny action at write-once build time buys the loud failure
         raise ValueError("centroids table is empty — cannot build index")
-    from pyspark_streaming_base_spark.operators.tombstones import reset_live
-
-    reset_live(f"{path}/assignments")
+    # a build defines the corpus: stale tombstones from a previous index
+    # at this path must not shadow freshly indexed ids (family contract)
+    tombstones.reset_for_build(_tables(path))
     centroids.select("cid", "cv").write.mode("overwrite").parquet(
         f"{path}/centroids"
     )
     assign_to_centroids(emb, centroids).select("vec_id", "cid").write.mode(
         "overwrite"
     ).parquet(f"{path}/assignments")
-    # a build defines the corpus: stale tombstones from a previous index
-    # at this path must not shadow freshly indexed ids (family contract)
-    from pyspark_streaming_base_spark.operators.tombstones import clear_tombstones
-
-    clear_tombstones(f"{path}/tombstones")
 
 
 def append_semdedup_index(
@@ -331,10 +327,8 @@ def append_semdedup_index(
     under pinned centroids (pytest parity, same contract as
     ``append_ivf_index``/``append_pq_index``). Callers must not append a
     vec_id twice."""
-    from pyspark_streaming_base_spark.operators.tombstones import append_live
-
     cent = spark.read.parquet(f"{path}/centroids")
-    append_live(
+    tombstones.append_live(
         assign_to_centroids(new_emb, cent).select("vec_id", "cid"),
         f"{path}/assignments",
     )
@@ -355,17 +349,22 @@ def semdedup_removed_from_index(
     return semdedup_removed(assigned, tau, exact_threshold)
 
 
+def _tables(path: str) -> tombstones.IndexTables:
+    """Live keys-only ``assignments``; the frozen centroids are read
+    directly where needed, never through the live view."""
+    return tombstones.IndexTables(
+        tombstones=f"{path}/tombstones",
+        id_col="vec_id",
+        live=(f"{path}/assignments",),
+        ratio_basis=f"{path}/assignments",
+    )
+
+
 def _live_assignments(spark: SparkSession, path: str) -> DataFrame:
     """Assignments minus tombstoned vec_ids — every policy/merge path
     reads through here so deleted vectors neither block nor get
     removed."""
-    from pyspark_streaming_base_spark.operators.tombstones import load_live_view
-
-    live = f"{path}/assignments"
-    (assignments,) = load_live_view(
-        spark, f"{path}/tombstones", "vec_id", live=[live], ratio_basis=live
-    )
-    return assignments
+    return tombstones.load_live_view(spark, _tables(path))[0]
 
 
 def delete_from_semdedup_index(
@@ -375,31 +374,13 @@ def delete_from_semdedup_index(
     Set semantics; shared contract in ``operators/tombstones.py``.
     ``compact_ratio`` opts into the delete-time auto-compaction hook
     (the bm25 convention)."""
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        maybe_compact,
-        write_tombstones,
-    )
-
-    write_tombstones(spark, f"{path}/tombstones", ids, "vec_id")
-    if compact_ratio is not None:
-        maybe_compact(
-            f"{path}/tombstones",
-            f"{path}/assignments",
-            lambda: compact_semdedup_index(spark, path),
-            ratio=compact_ratio,
-        )
+    tombstones.delete(spark, _tables(path), ids, compact_ratio)
 
 
 def compact_semdedup_index(spark: SparkSession, path: str) -> None:
     """Fold tombstones into the assignments table (staged-swap), clear
     them."""
-    from pyspark_streaming_base_spark.operators.tombstones import (
-        clear_tombstones,
-        swap_in,
-    )
-
-    swap_in(f"{path}/assignments", _live_assignments(spark, path))
-    clear_tombstones(f"{path}/tombstones")
+    tombstones.compact(spark, _tables(path))
 
 
 def merge_semdedup_removed(

@@ -42,10 +42,17 @@ APIs give you. ``snapshot_path`` still resolves a symlink pointer (the
 layout earlier versions published), so such an index keeps reading and
 its next ``swap_in`` replaces the link with a pointer file.
 
-Probes, loads and compactions open an index through ONE loader,
-``load_live_view``: live tables, frozen tables and the tombstone set
-resolve concurrently, tombstones are read once per call and anti-joined
-into every live table, and the compaction-ratio check runs at most once.
+Each family declares its layout once as an ``IndexTables`` (tombstone
+path, id column, live and frozen tables, ratio basis, slice
+partitioning), and four functions run the whole lifecycle from it:
+``load_live_view`` opens the index for probes and loads (live tables,
+frozen tables and the tombstone set resolve concurrently, tombstones are
+read once and anti-joined into every live table, the compaction-ratio
+check runs at most once); ``delete`` appends tombstones and, past an
+opt-in ``compact_ratio``, compacts (and says so); ``compact`` reads the live view
+without the ratio check, ``swap_in``s every live table and clears the
+tombstones; ``reset_for_build`` is the build prelude (``reset_live``
+every declared table, clear the tombstones).
 """
 
 from __future__ import annotations
@@ -56,7 +63,8 @@ import shutil
 import uuid
 import warnings
 from concurrent.futures import ThreadPoolExecutor
-from typing import Callable, Optional, Sequence
+from dataclasses import dataclass
+from typing import Callable, Optional, Sequence, Tuple
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -144,7 +152,9 @@ def read_tombstones(spark: SparkSession, tomb_path: str) -> Optional[DataFrame]:
         raise
 
 
-def _warn_past_ratio(tomb_path: str, live_path: str, warn_ratio: float) -> None:
+def _warn_past_ratio(
+    tomb_path: str, live_path: str, warn_ratio: float, stacklevel: int = 3
+) -> None:
     """Fire ``TombstoneCompactionNeeded`` once the tombstone-to-live row
     ratio (parquet footers — driver-side metadata only, no job) reaches
     ``warn_ratio``, so an operator who never schedules compaction hears
@@ -157,7 +167,7 @@ def _warn_past_ratio(tomb_path: str, live_path: str, warn_ratio: float) -> None:
             f"rows at {live_path} (threshold {warn_ratio:.0%}); "
             "schedule compaction",
             TombstoneCompactionNeeded,
-            stacklevel=3,
+            stacklevel=stacklevel,
         )
 
 
@@ -184,39 +194,104 @@ def apply_tombstones(
     return df.join(tomb.select(id_col), id_col, "anti")
 
 
-def load_live_view(
-    spark: SparkSession,
-    tomb_path: str,
-    id_col: str,
-    live: Sequence[str],
-    frozen: Sequence[str] = (),
-    ratio_basis: Optional[str] = None,
-) -> list:
-    """Open one persisted index: every ``live`` table minus the
-    tombstoned ids, then every ``frozen`` table (centroids, codebooks,
-    ordering stats — never tombstoned) as read, in the order given. The
-    one entry point for every index probe, load and compaction.
+@dataclass(frozen=True, kw_only=True)
+class IndexTables:
+    """The layout of one persisted index — everything the shared
+    lifecycle needs to know about a family. ``tombstones``: the
+    tombstone table's path; ``id_col``: the id column tombstones and
+    live tables share; ``live``: the tables probes anti-join against
+    the tombstones and compaction rewrites; ``frozen``: tables read as
+    written (centroids, codebooks, ordering stats); ``ratio_basis``: the
+    table the tombstone-to-live ratio is measured against;
+    ``partition_by``: the hive layout compaction keeps for every live
+    table. Each family states its layout once, in a private
+    ``_tables(path, ...)``."""
 
-    All tables resolve through ``read_live`` and the tombstone set
-    through ``read_tombstones``, concurrently: each is independent
-    driver-side metadata I/O (schema and footer reads), which opened
-    serially would add up before any job runs. Pure reads only — no
-    actions, no thread-local job-group state. The tombstone set is read ONCE and
-    shared by every anti-join. ``ratio_basis`` names the one-row-per-id
-    table the compaction-ratio check compares against; it runs at most
-    once per call, and only when tombstones exist. None skips it."""
-    paths = [*live, *frozen]
+    tombstones: str
+    id_col: str
+    live: Tuple[str, ...]
+    frozen: Tuple[str, ...] = ()
+    ratio_basis: str
+    partition_by: Tuple[str, ...] = ()
+
+
+def _open(
+    spark: SparkSession,
+    tables: IndexTables,
+    frozen: Sequence[str],
+    ratio_basis: Optional[str],
+) -> list:
+    """Every live table minus the tombstoned ids, then each of
+    ``frozen`` as read. All tables resolve through ``read_live`` and the
+    tombstone set through ``read_tombstones``, concurrently: each is
+    independent driver-side metadata I/O (schema and footer reads),
+    which opened serially would add up before any job runs. Pure reads
+    only — no actions, no thread-local job-group state. The tombstone
+    set is read ONCE and shared by every anti-join; the ratio check
+    against ``ratio_basis`` runs at most once, only when tombstones
+    exist, and not at all when it is None."""
+    paths = [*tables.live, *frozen]
     with ThreadPoolExecutor(max_workers=len(paths) + 1) as ex:
-        tomb_f = ex.submit(read_tombstones, spark, tomb_path)
-        tables = list(ex.map(lambda p: read_live(spark, p), paths))
+        tomb_f = ex.submit(read_tombstones, spark, tables.tombstones)
+        opened = list(ex.map(lambda p: read_live(spark, p), paths))
         tomb = tomb_f.result()
     if tomb is None:
-        return tables
+        return opened
     if ratio_basis is not None:
-        _warn_past_ratio(tomb_path, ratio_basis, COMPACT_RATIO)
-    ids = tomb.select(id_col)
-    n = len(live)
-    return [t.join(ids, id_col, "anti") for t in tables[:n]] + tables[n:]
+        # attributed to the caller of load_live_view, as for
+        # apply_tombstones
+        _warn_past_ratio(tables.tombstones, ratio_basis, COMPACT_RATIO, stacklevel=4)
+    ids = tomb.select(tables.id_col)
+    n = len(tables.live)
+    return [t.join(ids, tables.id_col, "anti") for t in opened[:n]] + opened[n:]
+
+
+def load_live_view(spark: SparkSession, tables: IndexTables) -> list:
+    """Open one persisted index: every live table minus the tombstoned
+    ids, then every frozen table, in declaration order. The one entry
+    point for every index probe and load; warns
+    ``TombstoneCompactionNeeded`` once the tombstones reach
+    ``COMPACT_RATIO`` of ``ratio_basis``."""
+    return _open(spark, tables, tables.frozen, tables.ratio_basis)
+
+
+def delete(
+    spark: SparkSession,
+    tables: IndexTables,
+    ids,
+    compact_ratio: Optional[float] = None,
+) -> bool:
+    """Tombstone ``ids`` (see ``write_tombstones``) — O(batch), no table
+    rewrite. With ``compact_ratio`` set, the delete is also the
+    compaction scheduler: once the tombstones reach that fraction of
+    ``ratio_basis`` it runs ``compact``. Returns whether it did."""
+    write_tombstones(spark, tables.tombstones, ids, tables.id_col)
+    return compact_ratio is not None and maybe_compact(
+        tables.tombstones,
+        tables.ratio_basis,
+        lambda: compact(spark, tables),
+        ratio=compact_ratio,
+    )
+
+
+def compact(spark: SparkSession, tables: IndexTables) -> None:
+    """Fold the tombstones into the index: ``swap_in`` each live table
+    minus the deleted ids (keeping ``partition_by``), then clear the
+    tombstone set. Reads without the ratio check — a compaction is the
+    remedy the warning asks for, not a probe."""
+    for path, df in zip(tables.live, _open(spark, tables, (), None)):
+        swap_in(path, df, tables.partition_by)
+    clear_tombstones(tables.tombstones)
+
+
+def reset_for_build(tables: IndexTables) -> None:
+    """The build prelude: ``reset_live`` every declared table and clear
+    the tombstones. A build defines the corpus, so stale deletes must
+    not shadow freshly indexed ids, and its overwrite writes must land
+    in plain directories, not through a generation pointer."""
+    for path in (*tables.live, *tables.frozen):
+        reset_live(path)
+    clear_tombstones(tables.tombstones)
 
 
 def _parquet_rows(path: str) -> Optional[int]:

@@ -61,7 +61,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
 from ..operators.schema_align import align_schema
-from ..sources.delta_log import DeltaLogSnapshot, _COMMIT_RE, latest_log_version
+from ..sources.delta_log import (
+    DeltaLogSnapshot,
+    _COMMIT_RE,
+    latest_log_version,
+    read_commit,
+)
 
 _SKIP_FILES = {"_SUCCESS"}
 
@@ -362,7 +367,7 @@ class DeltaLogTable:
         for v in versions:
             if v <= from_version or v > to_version:
                 continue
-            for action in _read_commit_actions(self._log_dir, v):
+            for action in read_commit(self._log_dir, v):
                 a = action.get("add")
                 if a and a.get("dataChange", True):
                     rel = unquote(a["path"])
@@ -628,12 +633,3 @@ class DeltaLogTable:
             "concurrent Delta writers detected; DeltaLogTable is "
             f"single-writer (version {v} was taken mid-commit)"
         )
-
-def _read_commit_actions(log_dir: str, version: int) -> List[dict]:
-    out = []
-    with open(os.path.join(log_dir, f"{version:020d}.json")) as f:
-        for line in f:
-            line = line.strip()
-            if line:
-                out.append(json.loads(line))
-    return out

@@ -67,6 +67,15 @@ def latest_log_version(log_dir: str) -> int:
     return max(vs) if vs else -1
 
 
+def read_commit(log_dir: str, version: int) -> List[dict]:
+    """The actions of commit ``version`` — one JSON object per
+    non-blank line of ``<log_dir>/<version:020d>.json``. The one parser
+    of commit files, for the snapshot replay, the streaming source and
+    the sink."""
+    with open(os.path.join(log_dir, f"{version:020d}.json")) as f:
+        return [json.loads(line) for line in f if line.strip()]
+
+
 class DeltaLogSnapshot:
     """One consistent version of a Delta table, reconstructed from its
     transaction log with no Delta jars. ``version=None`` → latest."""
@@ -157,11 +166,8 @@ class DeltaLogSnapshot:
                 and v > self._requested_version
             ):
                 break
-            with open(os.path.join(self._log_dir, f"{v:020d}.json")) as f:
-                for line in f:
-                    line = line.strip()
-                    if line:
-                        self._apply_action(json.loads(line))
+            for action in read_commit(self._log_dir, v):
+                self._apply_action(action)
             self.version = v
         if self._schema_json is None:
             lc = os.path.join(self._log_dir, "_last_checkpoint")

@@ -48,6 +48,7 @@ from pyspark_streaming_base_spark.sources.delta_log import (
     DeltaLogSnapshot,
     _COMMIT_RE,
     latest_log_version,
+    read_commit,
 )
 
 
@@ -103,25 +104,18 @@ def _read_split(split: _FileSplit) -> Iterator:
 
 def _commit_adds(table_path: str, version: int) -> List[Tuple[str, dict]]:
     """(abs path, partitionValues) for dataChange adds of one commit."""
-    out = []
-    log = os.path.join(table_path, "_delta_log", f"{version:020d}.json")
-    if not os.path.exists(log):
+    log_dir = os.path.join(table_path, "_delta_log")
+    if not os.path.exists(os.path.join(log_dir, f"{version:020d}.json")):
         raise FileNotFoundError(
             f"commit {version} is below the log-retention horizon "
             f"(clean_log removed it); start the stream at a retained "
             f"version (starting_version) or from a fresh checkpoint"
         )
-    with open(log) as f:
-        for line in f:
-            line = line.strip()
-            if not line:
-                continue
-            a = json.loads(line).get("add")
-            if a and a.get("dataChange", True):
-                out.append(
-                    (os.path.join(table_path, a["path"]), a.get("partitionValues") or {})
-                )
-    return out
+    return [
+        (os.path.join(table_path, a["path"]), a.get("partitionValues") or {})
+        for action in read_commit(log_dir, version)
+        if (a := action.get("add")) and a.get("dataChange", True)
+    ]
 
 
 #: filter types the log-stats pruner understands (single top-level column)

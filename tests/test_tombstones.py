@@ -407,3 +407,187 @@ def test_swap_sweeps_crash_debris(
     swap_in(live, _ids(spark, 11))
     assert read_live(spark, live).count() == 11
     assert not os.path.exists(stale_gen)  # debris swept by the swap
+
+
+# ---------------------------------------------------------------------------
+# The lifecycle every persisted-index family runs through its IndexTables
+# ---------------------------------------------------------------------------
+
+_N = 20  # ids 0..19
+
+
+def _docs(spark, ids, id_offset=0):
+    """One unique shingle run per doc (so each doc matches only its own
+    copy) plus a shared term every BM25 probe can hit."""
+    return spark.createDataFrame(
+        [
+            (i + id_offset, "en", f"common a{i} b{i} c{i} d{i} e{i}")
+            for i in ids
+        ],
+        "doc_id bigint, lang string, text string",
+    )
+
+
+def _vecs(spark, ids, col="vec"):
+    import math
+
+    return spark.createDataFrame(
+        [
+            (i, [math.cos(i), math.sin(i), i / _N, 1.0 - i / _N])
+            for i in ids
+        ],
+        f"vec_id bigint, {col} array<double>",
+    )
+
+
+def _bm25(spark):
+    from pyspark_streaming_base_spark.operators import bm25
+
+    return dict(
+        tomb="/tombstones",
+        build=lambda p, ids: bm25.build_bm25_index(_docs(spark, ids), p),
+        probe=lambda p: {
+            r["doc_id"] for r in bm25.query_bm25_index(spark, p, ["common"]).collect()
+        },
+        delete=lambda p, ids, **kw: bm25.delete_from_bm25_index(spark, p, ids, **kw),
+        compact=lambda p: bm25.compact_bm25_index(spark, p),
+    )
+
+
+def _minhash(spark):
+    from pyspark_streaming_base_spark.operators import minhash
+
+    # probe with exact copies under other ids: each live doc is a
+    # candidate of its copy
+    copies = _docs(spark, range(_N), id_offset=1000)
+    return dict(
+        tomb=".tombstones",
+        build=lambda p, ids: minhash.build_minhash_index(_docs(spark, ids), p),
+        probe=lambda p: {
+            r["index_id"] for r in minhash.query_minhash_index(spark, p, copies).collect()
+        },
+        delete=lambda p, ids, **kw: minhash.delete_from_minhash_index(spark, p, ids, **kw),
+        compact=lambda p: minhash.compact_minhash_index(spark, p),
+    )
+
+
+def _ivf(spark):
+    from pyspark_streaming_base_spark.operators import ivf
+
+    q = spark.createDataFrame([(-1, [0.0, 0.0, 0.5, 0.5])], "qid bigint, qvec array<double>")
+    return dict(
+        tomb="/tombstones",
+        build=lambda p, ids: ivf.build_ivf_index(_vecs(spark, ids), p, k=2),
+        probe=lambda p: {
+            r["vec_id"]
+            for r in ivf.query_ivf_index(spark, p, q, nprobe=2, top_k=_N).collect()
+        },
+        delete=lambda p, ids, **kw: ivf.delete_from_ivf_index(spark, p, ids, **kw),
+        compact=lambda p: ivf.compact_ivf_index(spark, p),
+    )
+
+
+def _pq(spark):
+    from pyspark_streaming_base_spark.operators import pq
+
+    q = spark.createDataFrame([(-1, [0.0, 0.0, 0.5, 0.5])], "qid bigint, qvec array<double>")
+    return dict(
+        tomb="/tombstones",
+        build=lambda p, ids: pq.build_pq_index(
+            _vecs(spark, ids), p, m=2, k=4, iters=1, n_cells=2
+        ),
+        probe=lambda p: {
+            r["vec_id"]
+            for r in pq.query_pq_index(
+                spark, p, q, m=2, nprobe=2, shortlist=_N, top_k=_N
+            ).collect()
+        },
+        delete=lambda p, ids, **kw: pq.delete_from_pq_index(spark, p, ids, **kw),
+        compact=lambda p: pq.compact_pq_index(spark, p),
+    )
+
+
+def _semdedup(spark):
+    from pyspark_streaming_base_spark.operators import semdedup
+
+    cent = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 1.0]), (1, [-1.0, 0.0, 1.0, 0.0])],
+        "cid int, cv array<double>",
+    )
+    return dict(
+        tomb="/tombstones",
+        build=lambda p, ids: semdedup.build_semdedup_index(
+            _vecs(spark, ids, col="v"), p, cent
+        ),
+        # every dedup policy reads the index through the live assignments
+        probe=lambda p: {
+            r["vec_id"] for r in semdedup._live_assignments(spark, p).collect()
+        },
+        delete=lambda p, ids, **kw: semdedup.delete_from_semdedup_index(
+            spark, p, ids, **kw
+        ),
+        compact=lambda p: semdedup.compact_semdedup_index(spark, p),
+    )
+
+
+def _containment(spark):
+    from pyspark_streaming_base_spark.operators import containment
+
+    copies = _docs(spark, range(_N), id_offset=1000)
+    return dict(
+        tomb="/tombstones",
+        build=lambda p, ids: containment.build_containment_index(_docs(spark, ids), p),
+        probe=lambda p: {
+            r["doc_big"]
+            for r in containment.query_containment_index(spark, p, copies).collect()
+        },
+        delete=lambda p, ids, **kw: containment.delete_from_containment_index(
+            spark, p, ids, **kw
+        ),
+        compact=lambda p: containment.compact_containment_index(spark, p),
+    )
+
+
+_FAMILIES = {
+    "bm25": _bm25,
+    "minhash": _minhash,
+    "ivf": _ivf,
+    "pq": _pq,
+    "semdedup": _semdedup,
+    "containment": _containment,
+}
+
+
+@pytest.mark.parametrize("family", sorted(_FAMILIES))
+def test_family_delete_compact_rebuild(spark, tmp_path, family):
+    """Each family, on a 20-id index: a probe after a delete excludes
+    the deleted ids (and warns past ``COMPACT_RATIO``); compacting folds
+    the tombstones WITHOUT warning that compaction is needed;
+    ``compact_ratio=0.0`` folds the tombstones inside the delete call;
+    and a rebuild over the deleted-from, compacted path brings every id
+    back."""
+    fam = _FAMILIES[family](spark)
+    path = str(tmp_path / "idx")
+    tomb = path + fam["tomb"]
+    everything = set(range(_N))
+
+    fam["build"](path, range(_N))
+    assert fam["probe"](path) == everything
+
+    fam["delete"](path, range(10))  # half the ids: past the ratio in every family
+    with pytest.warns(TombstoneCompactionNeeded):
+        assert fam["probe"](path) == everything - set(range(10))
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", TombstoneCompactionNeeded)
+        fam["compact"](path)
+        assert not os.path.exists(tomb)
+        assert fam["probe"](path) == everything - set(range(10))
+
+        fam["delete"](path, [10, 11], compact_ratio=0.0)
+        assert not os.path.exists(tomb)
+        assert fam["probe"](path) == everything - set(range(12))
+
+    fam["build"](path, range(_N))
+    assert not os.path.exists(tomb)
+    assert fam["probe"](path) == everything
