@@ -28,6 +28,8 @@ from typing import Optional, Tuple
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyspark_streaming_base_spark.parquet import read_parquet
+
 #: Default geometry: 2^18 bits = 4096 int64 words ≈ 32 KB broadcast.
 #: At n = 30k distinct keys (sf0.1 val-split shingles), k=3 →
 #: FP ≈ (1 − e^(−0.34))^3 ≈ 2.4%.
@@ -145,7 +147,7 @@ def build_bloom_index(
 
 def load_bloom_geometry(spark: SparkSession, path: str) -> Tuple[int, int]:
     """Read the persisted ``(m_bits, k)`` — one row, driver metadata only."""
-    rows = spark.read.parquet(f"{path}/geometry").collect()
+    rows = read_parquet(spark, f"{path}/geometry").collect()
     if len(rows) != 1:
         raise ValueError(f"corrupt bloom geometry sidecar at {path}: {len(rows)} rows")
     return int(rows[0]["m_bits"]), int(rows[0]["k"])
@@ -158,7 +160,7 @@ def append_bloom_index(new_df: DataFrame, col: str, path: str) -> None:
     comes from the sidecar, so an append can never drift it."""
     spark = new_df.sparkSession
     m_bits, k = load_bloom_geometry(spark, path)
-    old = spark.read.parquet(f"{path}/words")
+    old = read_parquet(spark, f"{path}/words")
     merged = (
         old.unionByName(build_bloom(new_df, col, m_bits, k))
         .groupBy("word")
@@ -194,5 +196,5 @@ def query_bloom_index(
             f"bloom geometry mismatch: index at {path} was built with "
             f"k={gk}, probe requested k={k}"
         )
-    words = spark.read.parquet(f"{path}/words")
+    words = read_parquet(spark, f"{path}/words")
     return bloom_maybe_contains(df, col, words, gm, gk)

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_streaming_base_spark.operators.semdedup import assign_to_centroids
+from pyspark_streaming_base_spark.parquet import read_parquet
 
 __all__ = [
     "write_drift_baseline",
@@ -60,7 +61,7 @@ def _centroids(spark: SparkSession, path: str) -> DataFrame:
     cosine-assigned IVF index the monitor's cells are not the index's
     cells; the error ratio and occupancy shift remain valid drift
     statistics because both sides use the same rule)."""
-    c = spark.read.parquet(f"{path}/centroids")
+    c = read_parquet(spark, f"{path}/centroids")
     if "cent_id" in c.columns:
         c = c.select(F.col("cent_id").alias("cid"), F.col("cvec").alias("cv"))
     return c
@@ -96,7 +97,7 @@ def write_drift_baseline(
 def _read_baseline(spark: SparkSession, path: str) -> DataFrame:
     """The segmented baseline table; pre-segment legacy tables (no
     ``segment`` column) read as one 'build' segment."""
-    b = spark.read.parquet(f"{path}/drift_baseline")
+    b = read_parquet(spark, f"{path}/drift_baseline")
     if "segment" not in b.columns:
         b = b.withColumn("segment", F.lit("build"))
     return b
@@ -115,7 +116,7 @@ def _normalize_legacy(spark: SparkSession, path: str) -> None:
     """One-time upgrade of a pre-segment baseline file so appends can't
     create a mixed-schema directory (readers would resolve the schema
     from an arbitrary file and silently drop the segment column)."""
-    b = spark.read.parquet(f"{path}/drift_baseline")
+    b = read_parquet(spark, f"{path}/drift_baseline")
     if "segment" not in b.columns:
         b.withColumn("segment", F.lit("build")).localCheckpoint(
             eager=True

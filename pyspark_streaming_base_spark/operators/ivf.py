@@ -111,7 +111,7 @@ def append_ivf_index(spark: SparkSession, path: str, new_emb: DataFrame) -> None
     + rebuild when the vector distribution drifts). Existing rows are
     untouched, so append == build-on-union under pinned centroids row
     for row. Callers must not append a vec_id twice."""
-    centroids = spark.read.parquet(f"{path}/centroids")
+    centroids = tombstones.read_live(spark, f"{path}/centroids")
     tombstones.append_live(ivf_assign(new_emb, centroids), f"{path}/assignments")
 
 

@@ -176,12 +176,14 @@ def index_band_pairs(index: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 def _tables(path: str, id_col: str) -> tombstones.IndexTables:
-    """One live table, the signatures at ``path`` itself."""
+    """One live table, the signatures at ``path`` itself: ``N_BANDS``
+    rows per doc, so the compaction ratio counts docs, not bands."""
     return tombstones.IndexTables(
         tombstones=f"{path}.tombstones",
         id_col=id_col,
         live=(path,),
         ratio_basis=path,
+        rows_per_id=N_BANDS,
     )
 
 

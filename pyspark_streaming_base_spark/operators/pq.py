@@ -669,7 +669,7 @@ def build_pq_index(
     )
     cb.write.mode("overwrite").parquet(f"{path}/codebooks")
     spark = cb.sparkSession
-    cb_saved = spark.read.parquet(f"{path}/codebooks")
+    cb_saved = tombstones.read_live(spark, f"{path}/codebooks")
     centroids.write.mode("overwrite").parquet(f"{path}/centroids")
     # r13: ONE fused corpus pass — cell assignment and PQ encoding are
     # both projections against 1-row broadcast quantizer folds
@@ -680,7 +680,7 @@ def build_pq_index(
     # Centroids are read BACK from the written parquet so a derived
     # centroid frame (e.g. the lowest-n_cells TakeOrdered above) is not
     # recomputed against the corpus.
-    cent_saved = spark.read.parquet(f"{path}/centroids")
+    cent_saved = tombstones.read_live(spark, f"{path}/centroids")
     (
         ivf_assign(spread(emb, "vec_id"), cent_saved)
         .join(F.broadcast(_cb_entries_row(cb_saved)))
@@ -709,8 +709,8 @@ def append_pq_index(spark, path: str, new_emb: DataFrame, m: int) -> None:
     (``tests/test_pq.py``). Callers must not append a vec_id twice."""
     from pyspark_streaming_base_spark.operators.ivf import ivf_assign
 
-    cb = spark.read.parquet(f"{path}/codebooks")
-    centroids = spark.read.parquet(f"{path}/centroids")
+    cb = tombstones.read_live(spark, f"{path}/codebooks")
+    centroids = tombstones.read_live(spark, f"{path}/centroids")
     # same fused single-pass shape as build_pq_index (r13): assignment
     # and encoding are projections, the batch is scanned once
     tombstones.append_live(

@@ -51,6 +51,8 @@ from typing import Callable, Iterable, Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyspark_streaming_base_spark.parquet import read_parquet
+
 __all__ = [
     "build_value_histogram",
     "merge_value_histogram",
@@ -105,10 +107,12 @@ def build_value_histogram(
 
 
 def value_histogram_segments(spark: SparkSession, path: str) -> list:
-    """Segment ids, sorted — the retraction/idempotence units."""
+    """Segment ids of the ``counts`` table at ``path``, sorted — the
+    retraction/idempotence units (of the equi-depth sketch too:
+    ``equidepth_segments``)."""
     return sorted(
         r["segment"]
-        for r in spark.read.parquet(f"{path}/counts")
+        for r in read_parquet(spark, f"{path}/counts")
         .select("segment")
         .distinct()
         .collect()  # bounded: one row per accepted batch
@@ -148,7 +152,7 @@ def remove_value_histogram(spark: SparkSession, path: str, segment: str) -> None
     subtraction; merge-then-remove == never-merged bit for bit."""
     if segment not in set(value_histogram_segments(spark, path)):
         raise ValueError(f"unknown segment {segment!r}")
-    remaining = spark.read.parquet(f"{path}/counts").filter(
+    remaining = read_parquet(spark, f"{path}/counts").filter(
         F.col("segment") != segment
     )
     # parquet overwrite would delete the input mid-plan; stage first
@@ -160,7 +164,7 @@ def remove_value_histogram(spark: SparkSession, path: str, segment: str) -> None
 def read_value_histogram(spark: SparkSession, path: str) -> DataFrame:
     """The merged ``(key, value, c)`` view (segments summed out)."""
     return (
-        spark.read.parquet(f"{path}/counts")
+        read_parquet(spark, f"{path}/counts")
         .groupBy("key", "value")
         .agg(F.sum("c").cast("bigint").alias("c"))
     )
@@ -294,7 +298,7 @@ def build_equidepth_sketch(
 def _read_cuts(spark: SparkSession, path: str) -> list:
     return [
         r["cut"]
-        for r in spark.read.parquet(f"{path}/edges").orderBy("i").collect()
+        for r in read_parquet(spark, f"{path}/edges").orderBy("i").collect()
     ]  # bounded: ≤ n_buckets−1 rows
 
 
@@ -312,14 +316,7 @@ def _equidepth_counts(df: DataFrame, val_col: str, cuts: Sequence[float]) -> Dat
     )
 
 
-def equidepth_segments(spark: SparkSession, path: str) -> list:
-    return sorted(
-        r["segment"]
-        for r in spark.read.parquet(f"{path}/counts")
-        .select("segment")
-        .distinct()
-        .collect()
-    )
+equidepth_segments = value_histogram_segments
 
 
 def merge_equidepth_sketch(
@@ -351,15 +348,9 @@ def remove_equidepth_sketch(spark: SparkSession, path: str, segment: str) -> Non
     """RETRACT one segment. Counts are exact removals; the merged vmax
     legitimately SHRINKS back if the removed batch held a bucket's
     maximum (max-of-remaining, not max-ever — that is why vmax is stored
-    per segment, not folded in place)."""
-    if segment not in set(equidepth_segments(spark, path)):
-        raise ValueError(f"unknown segment {segment!r}")
-    remaining = spark.read.parquet(f"{path}/counts").filter(
-        F.col("segment") != segment
-    )
-    remaining.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-        f"{path}/counts"
-    )
+    per segment, not folded in place). Same retraction as
+    ``remove_value_histogram``: both keep their segments in ``counts``."""
+    remove_value_histogram(spark, path, segment)
 
 
 def equidepth_percentiles(
@@ -374,7 +365,7 @@ def equidepth_percentiles(
     it stays valid however post-merge drift skews the frozen buckets.
     Cost: one ≤buckets-row fold (single-partition by construction)."""
     b = (
-        spark.read.parquet(f"{path}/counts")
+        read_parquet(spark, f"{path}/counts")
         .groupBy("bucket")
         .agg(F.sum("n").cast("bigint").alias("n"), F.max("vmax").alias("vmax"))
     )

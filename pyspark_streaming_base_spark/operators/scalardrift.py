@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyspark_streaming_base_spark.parquet import read_parquet
+
 __all__ = [
     "write_scalar_baseline",
     "scalar_drift_report",
@@ -88,7 +90,7 @@ def write_scalar_baseline(
         F.lit(n_buckets).cast("bigint").alias("nb"),
     )
     edges.write.mode("overwrite").parquet(f"{path}/edges")
-    edges = spark.read.parquet(f"{path}/edges")
+    edges = read_parquet(spark, f"{path}/edges")
     _bucket_counts(df, col, edges).withColumn(
         "segment", F.lit("build")
     ).write.mode("overwrite").parquet(f"{path}/counts")
@@ -97,7 +99,7 @@ def write_scalar_baseline(
 def _read_counts(spark: SparkSession, path: str) -> DataFrame:
     """The segmented counts table; pre-segment legacy tables read as one
     'build' segment."""
-    c = spark.read.parquet(f"{path}/counts")
+    c = read_parquet(spark, f"{path}/counts")
     if "segment" not in c.columns:
         c = c.withColumn("segment", F.lit("build"))
     return c
@@ -124,7 +126,7 @@ def scalar_drift_report(
     aggregate + a ≤buckets-row broadcast grid."""
     if chi2_crit <= 0 or not 0 < tv_max <= 1:
         raise ValueError(f"bad thresholds: {chi2_crit}, {tv_max}")
-    edges = spark.read.parquet(f"{path}/edges")
+    edges = read_parquet(spark, f"{path}/edges")
     base = (
         _read_counts(spark, path)
         .groupBy("bucket")
@@ -197,7 +199,7 @@ def merge_scalar_baseline(
     (retrain = ``write_scalar_baseline`` from scratch, the quantizer
     contract)."""
     # one-time legacy upgrade so appends can't create a mixed-schema dir
-    c = spark.read.parquet(f"{path}/counts")
+    c = read_parquet(spark, f"{path}/counts")
     if "segment" not in c.columns:
         c.withColumn("segment", F.lit("build")).localCheckpoint(
             eager=True
@@ -210,7 +212,7 @@ def merge_scalar_baseline(
         segment = f"seg-{i}"
     elif segment in existing:
         raise ValueError(f"segment {segment!r} already exists in the baseline")
-    edges = spark.read.parquet(f"{path}/edges")
+    edges = read_parquet(spark, f"{path}/edges")
     _bucket_counts(batch, col, edges).withColumn(
         "segment", F.lit(segment)
     ).write.mode("append").parquet(f"{path}/counts")

@@ -327,7 +327,7 @@ def append_semdedup_index(
     under pinned centroids (pytest parity, same contract as
     ``append_ivf_index``/``append_pq_index``). Callers must not append a
     vec_id twice."""
-    cent = spark.read.parquet(f"{path}/centroids")
+    cent = tombstones.read_live(spark, f"{path}/centroids")
     tombstones.append_live(
         assign_to_centroids(new_emb, cent).select("vec_id", "cid"),
         f"{path}/assignments",

@@ -45,13 +45,13 @@ its next ``swap_in`` replaces the link with a pointer file.
 Each family declares its layout once as an ``IndexTables`` (tombstone
 path, id column, live and frozen tables, ratio basis, slice
 partitioning), and four functions run the whole lifecycle from it:
-``load_live_view`` opens the index for probes and loads (live tables,
-frozen tables and the tombstone set resolve concurrently, tombstones are
-read once and anti-joined into every live table, the compaction-ratio
-check runs at most once); ``delete`` appends tombstones and, past an
-opt-in ``compact_ratio``, compacts (and says so); ``compact`` reads the live view
-without the ratio check, ``swap_in``s every live table and clears the
-tombstones; ``reset_for_build`` is the build prelude (``reset_live``
+``load_live_view`` opens the index for probes and loads (every table
+and the tombstone set read through the ``parquet.read_parquet`` schema
+memo, tombstones read once and anti-joined into every live table, the
+compaction-ratio check run at most once); ``delete`` appends tombstones
+and, past an opt-in ``compact_ratio``, compacts (and says so);
+``compact`` reads the live view without the ratio check, ``swap_in``s
+every live table and clears the tombstones; ``reset_for_build`` is the build prelude (``reset_live``
 every declared table, clear the tombstones).
 """
 
@@ -62,12 +62,13 @@ import os
 import shutil
 import uuid
 import warnings
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Callable, Optional, Sequence, Tuple
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+
+from pyspark_streaming_base_spark.parquet import read_parquet
 
 #: Tombstone-to-live row ratio at which probes warn and
 #: ``maybe_compact`` fires: past this, the anti-join side stops being
@@ -140,7 +141,7 @@ def read_tombstones(spark: SparkSession, tomb_path: str) -> Optional[DataFrame]:
     if not os.path.exists(tomb_path):
         return None
     try:
-        return spark.read.parquet(tomb_path).distinct()
+        return read_parquet(spark, tomb_path).distinct()
     except AnalysisException:
         # the dir vanished between the existence check and the read
         # (a racing clear_tombstones) — same meaning as path-missing.
@@ -153,18 +154,19 @@ def read_tombstones(spark: SparkSession, tomb_path: str) -> Optional[DataFrame]:
 
 
 def _warn_past_ratio(
-    tomb_path: str, live_path: str, warn_ratio: float, stacklevel: int = 3
+    tomb_path: str, live_path: str, warn_ratio: float, stacklevel: int = 3, rows_per_id: int = 1
 ) -> None:
-    """Fire ``TombstoneCompactionNeeded`` once the tombstone-to-live row
-    ratio (parquet footers — driver-side metadata only, no job) reaches
-    ``warn_ratio``, so an operator who never schedules compaction hears
-    about the silently-degrading probe instead of paying for it
-    forever. Attributed to the caller of the public entry point."""
-    ratio = tombstone_ratio(tomb_path, live_path)
+    """Fire ``TombstoneCompactionNeeded`` once the tombstone-to-live
+    ratio (parquet footers — driver-side metadata only, no job; see
+    ``tombstone_ratio``) reaches ``warn_ratio``, so an operator who
+    never schedules compaction hears about the silently-degrading probe
+    instead of paying for it forever. Attributed to the caller of the
+    public entry point."""
+    ratio = tombstone_ratio(tomb_path, live_path, rows_per_id)
     if ratio is not None and ratio >= warn_ratio:
         warnings.warn(
             f"tombstones at {tomb_path} are {ratio:.0%} of the live "
-            f"rows at {live_path} (threshold {warn_ratio:.0%}); "
+            f"ids at {live_path} (threshold {warn_ratio:.0%}); "
             "schedule compaction",
             TombstoneCompactionNeeded,
             stacklevel=stacklevel,
@@ -202,9 +204,10 @@ class IndexTables:
     live tables share; ``live``: the tables probes anti-join against
     the tombstones and compaction rewrites; ``frozen``: tables read as
     written (centroids, codebooks, ordering stats); ``ratio_basis``: the
-    table the tombstone-to-live ratio is measured against;
-    ``partition_by``: the hive layout compaction keeps for every live
-    table. Each family states its layout once, in a private
+    table the tombstone-to-live ratio is measured against, holding
+    ``rows_per_id`` rows per id (MinHash: one per band), so the ratio
+    counts ids; ``partition_by``: the hive layout compaction keeps for
+    every live table. Each family states its layout once, in a private
     ``_tables(path, ...)``."""
 
     tombstones: str
@@ -212,6 +215,7 @@ class IndexTables:
     live: Tuple[str, ...]
     frozen: Tuple[str, ...] = ()
     ratio_basis: str
+    rows_per_id: int = 1
     partition_by: Tuple[str, ...] = ()
 
 
@@ -223,24 +227,20 @@ def _open(
 ) -> list:
     """Every live table minus the tombstoned ids, then each of
     ``frozen`` as read. All tables resolve through ``read_live`` and the
-    tombstone set through ``read_tombstones``, concurrently: each is
-    independent driver-side metadata I/O (schema and footer reads),
-    which opened serially would add up before any job runs. Pure reads
-    only — no actions, no thread-local job-group state. The tombstone
-    set is read ONCE and shared by every anti-join; the ratio check
-    against ``ratio_basis`` runs at most once, only when tombstones
-    exist, and not at all when it is None."""
-    paths = [*tables.live, *frozen]
-    with ThreadPoolExecutor(max_workers=len(paths) + 1) as ex:
-        tomb_f = ex.submit(read_tombstones, spark, tables.tombstones)
-        opened = list(ex.map(lambda p: read_live(spark, p), paths))
-        tomb = tomb_f.result()
+    tombstone set through ``read_tombstones``; both declare the schema
+    the memo learned, so opening an index launches no job once its
+    tables have been seen. The tombstone set is read ONCE and shared by
+    every anti-join; the ratio check against ``ratio_basis`` runs at
+    most once, only when tombstones exist, and not at all when it is
+    None."""
+    tomb = read_tombstones(spark, tables.tombstones)
+    opened = [read_live(spark, p) for p in (*tables.live, *frozen)]
     if tomb is None:
         return opened
     if ratio_basis is not None:
         # attributed to the caller of load_live_view, as for
         # apply_tombstones
-        _warn_past_ratio(tables.tombstones, ratio_basis, COMPACT_RATIO, stacklevel=4)
+        _warn_past_ratio(tables.tombstones, ratio_basis, COMPACT_RATIO, 4, tables.rows_per_id)
     ids = tomb.select(tables.id_col)
     n = len(tables.live)
     return [t.join(ids, tables.id_col, "anti") for t in opened[:n]] + opened[n:]
@@ -270,7 +270,8 @@ def delete(
         tables.tombstones,
         tables.ratio_basis,
         lambda: compact(spark, tables),
-        ratio=compact_ratio,
+        compact_ratio,
+        tables.rows_per_id,
     )
 
 
@@ -311,16 +312,17 @@ def _parquet_rows(path: str) -> Optional[int]:
     return total if found else None
 
 
-def tombstone_ratio(tomb_path: str, live_path: str) -> Optional[float]:
-    """Tombstone rows / live rows from parquet footers, or None when
-    either side is missing/empty. The tombstone count includes
-    idempotent repeat-appends (footers can't distinct), so this is an
-    upper bound — exactly the right bias for a compaction trigger."""
+def tombstone_ratio(tomb_path: str, live_path: str, rows_per_id: int = 1) -> Optional[float]:
+    """Tombstoned ids / live ids from parquet footers (the live table
+    holds ``rows_per_id`` rows per id), or None when either side is
+    missing/empty. The tombstone count includes idempotent
+    repeat-appends (footers can't distinct), so this is an upper bound
+    — exactly the right bias for a compaction trigger."""
     tomb = _parquet_rows(snapshot_path(tomb_path))
     live = _parquet_rows(snapshot_path(live_path))
     if tomb is None or not live:
         return None
-    return tomb / live
+    return tomb * rows_per_id / live
 
 
 def maybe_compact(
@@ -328,12 +330,13 @@ def maybe_compact(
     live_path: str,
     compact_fn: Callable[[], None],
     ratio: float = COMPACT_RATIO,
+    rows_per_id: int = 1,
 ) -> bool:
-    """Run ``compact_fn`` iff the tombstone-to-live ratio reached
-    ``ratio``; returns whether it ran. The scheduling hook callers put
-    after delete batches: ``maybe_compact(tp, lp, lambda:
-    compact_bm25_index(spark, path))``."""
-    r = tombstone_ratio(tomb_path, live_path)
+    """Run ``compact_fn`` iff the tombstone-to-live ratio (see
+    ``tombstone_ratio``) reached ``ratio``; returns whether it ran. The
+    scheduling hook callers put after delete batches:
+    ``maybe_compact(tp, lp, lambda: compact_bm25_index(spark, path))``."""
+    r = tombstone_ratio(tomb_path, live_path, rows_per_id)
     if r is not None and r >= ratio:
         compact_fn()
         return True
@@ -357,10 +360,10 @@ def snapshot_path(live_path: str) -> str:
 
 
 def read_live(spark: SparkSession, live_path: str) -> DataFrame:
-    """``spark.read.parquet`` of the CURRENT snapshot behind
-    ``live_path`` — the one read entry point for every persisted-index
-    probe, so the pointer-resolution rule lives in one place."""
-    return spark.read.parquet(snapshot_path(live_path))
+    """``read_parquet`` of the CURRENT snapshot behind ``live_path`` —
+    the one read entry point for every persisted-index probe, so the
+    pointer-resolution rule lives in one place."""
+    return read_parquet(spark, snapshot_path(live_path))
 
 
 def append_live(df: DataFrame, live_path: str, partition_by=()) -> None:

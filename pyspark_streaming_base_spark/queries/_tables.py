@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyspark_streaming_base_spark.parquet import read_parquet
+
 TABLES = (
     "region",
     "nation",
@@ -39,29 +41,37 @@ DIM_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one synthetic table; plain parquet scan, pushdown-friendly.
 
-    ``events.ts`` is written as parquet TIMESTAMP(NANOS), which Spark 4
-    rejects by default (PARQUET_TYPE_ILLEGAL). We read nanos as long via the
-    legacy conf and rebuild a microsecond TimestampType with *integer*
-    division (``div 1000`` — double division would lose precision on
-    10^18-scale nanos), matching DuckDB's nanos→micros truncation exactly.
+    Reads go through ``parquet.read_parquet``: the table's schema is
+    inferred once per file listing and declared on every later read, so
+    building a query launches no schema-inference job and leaves the
+    session conf as it found it. ``events`` is normalised by
+    ``events_ts``.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            # Generator encoding drifts round-to-round (nanos vs NTZ micros).
-            # Normalize to TIMESTAMP (LTZ): watermarks/event-time ops require
-            # it, and the wall-clock value round-trips unchanged because
-            # Spark renders LTZ in the same session timezone the NTZ cast
-            # interpreted it in — so oracle value parity is tz-independent.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    return events_ts(df) if name == "events" else df
+
+
+def events_ts(df: DataFrame) -> DataFrame:
+    """``events`` with ``ts`` as a microsecond TIMESTAMP (LTZ).
+
+    The generator writes ``ts`` either as parquet TIMESTAMP(NANOS), which
+    ``read_parquet`` declares ``bigint`` nanoseconds, or as NTZ micros.
+    Nanos become micros by *integer* division (``div 1000`` — double
+    division would lose precision on 10^18-scale nanos), matching
+    DuckDB's nanos→micros truncation exactly. NTZ is cast to LTZ:
+    watermarks/event-time ops require it, and the wall-clock value
+    round-trips unchanged because Spark renders LTZ in the same session
+    timezone the NTZ cast interpreted it in — so oracle value parity is
+    tz-independent.
+    """
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def dim(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -64,6 +64,8 @@ from ..operators.schema_align import align_schema
 from ..sources.delta_log import (
     DeltaLogSnapshot,
     _COMMIT_RE,
+    decode_path,
+    encode_path,
     latest_log_version,
     read_commit,
 )
@@ -310,7 +312,7 @@ class DeltaLogTable:
             rows.append(
                 {
                     "add": {
-                        "path": rel,
+                        "path": encode_path(rel),
                         # None, not {}: pyarrow cannot infer an empty
                         # struct; the reader coalesces null back to {}
                         "partitionValues": pv or None,
@@ -370,7 +372,7 @@ class DeltaLogTable:
             for action in read_commit(self._log_dir, v):
                 a = action.get("add")
                 if a and a.get("dataChange", True):
-                    rel = unquote(a["path"])
+                    rel = decode_path(a["path"])
                     files.append(
                         (os.path.join(self.table_path, rel), a.get("partitionValues") or {})
                     )
@@ -443,7 +445,7 @@ class DeltaLogTable:
                 adds.append(
                     {
                         "add": {
-                            "path": rel.replace(os.sep, "/"),
+                            "path": encode_path(rel),
                             "partitionValues": pv,
                             "size": st.st_size,
                             "modificationTime": int(st.st_mtime * 1000),
@@ -457,7 +459,7 @@ class DeltaLogTable:
                 actions.append(
                     {
                         "remove": {
-                            "path": rel,
+                            "path": encode_path(rel),
                             "deletionTimestamp": max(
                                 (a["add"]["modificationTime"] for a in adds), default=0
                             ),
@@ -595,7 +597,7 @@ class DeltaLogTable:
             adds.append(
                 {
                     "add": {
-                        "path": rel.replace(os.sep, "/"),
+                        "path": encode_path(rel),
                         "partitionValues": pv,
                         "size": st.st_size,
                         "modificationTime": int(st.st_mtime * 1000),
@@ -613,7 +615,7 @@ class DeltaLogTable:
                 actions.append(
                     {
                         "remove": {
-                            "path": rel,
+                            "path": encode_path(rel),
                             "deletionTimestamp": ts,
                             "dataChange": True,
                         }

@@ -74,6 +74,8 @@ from typing import Dict, List, Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyspark_streaming_base_spark.parquet import read_parquet
+
 
 def _keep_latest(
     df: DataFrame,
@@ -321,10 +323,11 @@ class UpsertTable:
         if not last_ids:
             return
         stored = self._stored_schema()
-        reader = spark.read.schema(stored) if stored is not None else spark.read
-        cur = reader.parquet(*all_files).withColumn(
-            "_bucket", self._bucket_expr()
-        )
+        cur = (
+            spark.read.schema(stored).parquet(*all_files)
+            if stored is not None
+            else read_parquet(spark, *all_files)
+        ).withColumn("_bucket", self._bucket_expr())
         kept = cur.filter(
             ~(
                 F.coalesce(F.col(self.delete_col), F.lit(False))
@@ -394,7 +397,7 @@ class UpsertTable:
             df = (
                 spark.read.schema(stored).parquet(*files)
                 if stored is not None
-                else spark.read.parquet(*files)
+                else read_parquet(spark, *files)
             )
             if self.delete_col:
                 df = df.filter(~F.coalesce(F.col(self.delete_col), F.lit(False)))
@@ -487,7 +490,7 @@ class PartitionedUpsertTable:
         ]
         if current_files:
             current = (
-                spark.read.parquet(*current_files)
+                read_parquet(spark, *current_files)
                 .withColumn("_part", F.col(pc).cast("string"))
                 .withColumn("_bucket", bucket_expr)
             )

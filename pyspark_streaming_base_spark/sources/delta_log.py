@@ -41,7 +41,7 @@ import json
 import os
 import re
 from typing import Dict, List, Optional, Tuple
-from urllib.parse import unquote
+from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,6 +65,21 @@ def latest_log_version(log_dir: str) -> int:
         with open(lc) as f:
             vs.append(int(json.load(f)["version"]))
     return max(vs) if vs else -1
+
+
+def decode_path(path: str) -> str:
+    """An add/remove action's ``path`` as the file's name relative to
+    the table. The protocol records a percent-encoded URI path (the file
+    in ``k=a b/`` is logged as ``k=a%20b/``), so every reader of an
+    action's path decodes it here."""
+    return unquote(path)
+
+
+def encode_path(rel: str) -> str:
+    """The inverse of ``decode_path``, for writers: a table-relative
+    file name as the percent-encoded path a commit records (Spark's own
+    ``k=a%3Ab/`` partition directory is logged ``k=a%253Ab/``)."""
+    return quote(rel.replace(os.sep, "/"), safe="/=")
 
 
 def read_commit(log_dir: str, version: int) -> List[dict]:
@@ -132,11 +147,11 @@ class DeltaLogSnapshot:
             if not isinstance(pv, dict):
                 # pyarrow deserializes checkpoint map columns as pair lists
                 pv = dict(pv)
-            self._active[unquote(a["path"])] = pv
-            self._add_stats[unquote(a["path"])] = a.get("stats")
+            self._active[decode_path(a["path"])] = pv
+            self._add_stats[decode_path(a["path"])] = a.get("stats")
         elif "remove" in action:
-            self._active.pop(unquote(action["remove"]["path"]), None)
-            self._add_stats.pop(unquote(action["remove"]["path"]), None)
+            self._active.pop(decode_path(action["remove"]["path"]), None)
+            self._add_stats.pop(decode_path(action["remove"]["path"]), None)
         elif "txn" in action:
             tx = action["txn"]
             app = tx.get("appId")

@@ -47,6 +47,7 @@ from pyspark.sql.types import StructType
 from pyspark_streaming_base_spark.sources.delta_log import (
     DeltaLogSnapshot,
     _COMMIT_RE,
+    decode_path,
     latest_log_version,
     read_commit,
 )
@@ -112,7 +113,7 @@ def _commit_adds(table_path: str, version: int) -> List[Tuple[str, dict]]:
             f"version (starting_version) or from a fresh checkpoint"
         )
     return [
-        (os.path.join(table_path, a["path"]), a.get("partitionValues") or {})
+        (os.path.join(table_path, decode_path(a["path"])), a.get("partitionValues") or {})
         for action in read_commit(log_dir, version)
         if (a := action.get("add")) and a.get("dataChange", True)
     ]

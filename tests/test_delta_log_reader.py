@@ -251,3 +251,64 @@ def test_checkpoint_parquet_base(spark, tmp_path):
     assert snap.version == 2
     got = {tuple(r) for r in snap.read(spark).collect()}
     assert got == {(1, "a"), (3, "c")}
+
+
+# -- add.path is percent-encoded: one decode rule for every reader ----------
+
+
+def _stream_rows(table):
+    """Every row the streaming source's reader yields over all commits."""
+    from pyspark_streaming_base_spark.sources.delta_log import latest_log_version
+    from pyspark_streaming_base_spark.sources.delta_log_stream import (
+        DeltaLogStreamReader,
+    )
+
+    reader = DeltaLogStreamReader({"path": table})
+    end = latest_log_version(os.path.join(table, "_delta_log"))
+    rows = []
+    for split in reader.partitions({"version": -1}, {"version": end}):
+        for batch in reader.read(split):
+            rows += batch.to_pylist()
+    return rows
+
+
+def test_encoded_add_path_reads_in_snapshot_and_stream(spark, tmp_path):
+    table = str(tmp_path / "enc")
+    os.makedirs(os.path.join(table, "p=a b"))
+    _write_file(spark, table, "p=a b/part-0.parquet", [(1, "x")])
+    schema = json.dumps(
+        {
+            "type": "struct",
+            "fields": [
+                {"name": "k", "type": "long", "nullable": True, "metadata": {}},
+                {"name": "v", "type": "string", "nullable": True, "metadata": {}},
+                {"name": "p", "type": "string", "nullable": True, "metadata": {}},
+            ],
+        }
+    )
+    _commit(table, 0, [_meta(schema, pcols=["p"]), _add("p=a%20b/part-0.parquet", {"p": "a b"})])
+
+    snap = DeltaLogSnapshot(table)
+    assert [os.path.exists(f) for f, _pv in snap.files()] == [True]
+    assert {tuple(r) for r in snap.read(spark).collect()} == {(1, "x", "a b")}
+    assert _stream_rows(table) == [{"k": 1, "v": "x", "p": "a b"}]
+
+
+def test_sink_partition_value_with_colon_round_trips(spark, tmp_path):
+    from pyspark_streaming_base_spark.sinks.delta_log import DeltaLogTable
+    from pyspark_streaming_base_spark.sources.delta_log import read_commit
+
+    table = str(tmp_path / "colon")
+    sink = DeltaLogTable(table)
+    sink.create(
+        spark.createDataFrame([], "k BIGINT, v STRING, p STRING").schema,
+        partition_columns=["p"],
+    )
+    sink.append(spark.createDataFrame([(1, "x", "10:30")], "k BIGINT, v STRING, p STRING"))
+
+    (add,) = [a["add"] for a in read_commit(os.path.join(table, "_delta_log"), 1) if "add" in a]
+    # Spark escapes ':' in the directory name; the log percent-encodes that name
+    assert add["path"].startswith("p=10%253A30/")
+    assert os.path.isdir(os.path.join(table, "p=10%3A30"))
+    assert {tuple(r) for r in DeltaLogSnapshot(table).read(spark).collect()} == {(1, "x", "10:30")}
+    assert _stream_rows(table) == [{"k": 1, "v": "x", "p": "10:30"}]

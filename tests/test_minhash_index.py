@@ -173,6 +173,43 @@ def test_compact_folds_tombstones(spark, tmp_path, pointer_writer):
     assert raw.filter(F.col("doc_id").isin(gone)).count() == 0
 
 
+def test_compaction_ratio_counts_docs_not_bands(spark, tmp_path):
+    """The signature table holds N_BANDS rows per doc, but the
+    tombstone ratio counts docs: deleting 2 of 20 docs (10%) reaches the
+    10% threshold — the probe warns and ``compact_ratio=0.1`` compacts."""
+    import os
+
+    import pytest
+
+    from pyspark_streaming_base_spark.operators.minhash import (
+        N_BANDS,
+        delete_from_minhash_index,
+        load_minhash_index,
+    )
+    from pyspark_streaming_base_spark.operators.tombstones import (
+        TombstoneCompactionNeeded,
+        read_live,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} shares w{i % 3} words") for i in range(20)],
+        "doc_id bigint, text string",
+    )
+    warned, compacted = str(tmp_path / "warned"), str(tmp_path / "compacted")
+    for idx in (warned, compacted):
+        build_minhash_index(docs, idx)
+    assert read_live(spark, warned).count() == 20 * N_BANDS
+
+    delete_from_minhash_index(spark, warned, [0, 1])
+    with pytest.warns(TombstoneCompactionNeeded, match="10% of the live ids"):
+        load_minhash_index(spark, warned)
+
+    delete_from_minhash_index(spark, compacted, [0, 1], compact_ratio=0.1)
+    assert not os.path.exists(f"{compacted}.tombstones")
+    ids = {r["doc_id"] for r in read_live(spark, compacted).collect()}
+    assert ids == set(range(2, 20))
+
+
 def test_permutations_are_distinct(spark):
     """Regression guard for the r13 salt fix: a two-parameter lambda
     passed to transform() is the (element, index) variant, so the old

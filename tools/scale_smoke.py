@@ -24,7 +24,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from pyspark_streaming_base_spark.parquet import read_parquet
 from pyspark_streaming_base_spark.queries._exact import dsum
+from pyspark_streaming_base_spark.queries._tables import events_ts
 from pyspark_streaming_base_spark.session import SessionFactory
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -141,15 +143,9 @@ def shapes(spark, n: int):
     # q113's shape: chained conditional-min windows on ONE partition spec —
     # must stay a single exchange however many events flow through it.
     # events.ts encoding drifts round-to-round (TIMESTAMP(NANOS) vs NTZ
-    # micros) — normalize exactly like queries/_tables.t() so the smoke
-    # survives either fixture encoding.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ev = spark.read.parquet(*([f"{SF_DIR}/events.parquet"] * n))
-    ts_type = dict(ev.dtypes).get("ts")
-    if ts_type == "bigint":
-        ev = ev.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif ts_type == "timestamp_ntz":
-        ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
+    # micros) — read and normalize it the way queries/_tables.t() does so
+    # the smoke survives either fixture encoding.
+    ev = events_ts(read_parquet(spark, *([f"{SF_DIR}/events.parquet"] * n)))
     ev = ev.select("user_id", "ts", "event_type")
     wu = W.partitionBy("user_id")
     f1 = ev.withColumn(
@@ -174,7 +170,7 @@ def shapes(spark, n: int):
         equidepth_histogram,
     )
 
-    ev_h = spark.read.parquet(*([f"{SF_DIR}/events.parquet"] * n)).select(
+    ev_h = read_parquet(spark, *([f"{SF_DIR}/events.parquet"] * n)).select(
         "event_type", "value", "event_id"
     )
     hist_sketch = equidepth_histogram(
