@@ -1,7 +1,7 @@
 # Developer entry points. All gates run on the preinstalled toolchain —
 # no network access assumed.
 
-.PHONY: test test-full correctness correctness-sf01 bench lint plan-lint plans install smoke scale-smoke loc
+.PHONY: test test-full correctness correctness-sf01 bench perf-selftest lint plan-lint plans install smoke scale-smoke loc
 
 test:
 	# default tier: slow soak/property/e2e tests excluded (pyproject
@@ -25,6 +25,10 @@ scale-smoke:
 
 bench:
 	python bench.py 2>/dev/null | tail -1
+
+perf-selftest:
+	# smoke of every perfbench workload at tiny scale + the job-count pin
+	python3 perfbench/selftest.py
 
 lint:
 	@command -v ruff >/dev/null 2>&1 && ruff check pyspark_streaming_base_spark tests tools \

@@ -20,9 +20,13 @@ Append = append-only writes of the new batch's postings/doclens rows —
 both tables are per-document facts, so batch-then-append equals
 build-on-the-union ROW FOR ROW (no quantizer to freeze, unlike the
 vector indexes). Corpus statistics (N, avgdl, per-term df) are derived
-at probe time from the tables themselves — one narrow aggregate over
-doclens (doc-count-sized) and a k-row aggregate over the pushed-down
-postings — so append can never leave a stale df/N behind.
+from the live tables themselves, once per index state: the first probe
+of a state aggregates doclens and the pushed-down postings; from its
+second probe on, ``tombstones.resident_state`` holds a persisted
+term-partitioned scoring table with N and avgdl as numbers, so a probe
+runs 2 jobs (the df window needs no exchange). Every append, delete,
+compaction or rebuild makes a new state, so no probe sees a stale
+df/N.
 
 Scoring: Okapi BM25 (Robertson et al., TREC-3 1994 — public) with the
 Robertson–Spärck Jones idf in RATIONAL form ``(N − df + 0.5)/(df + 0.5)``
@@ -87,6 +91,42 @@ def bm25_score_expr(
     return F.floor(idf * norm * F.lit(1000000.0) + F.lit(0.5)).cast("bigint")
 
 
+def _term_hits(postings: DataFrame, terms: Sequence[str]) -> DataFrame:
+    """The postings rows of the query terms, each with its term's df
+    attached by a term-partitioned window."""
+    from pyspark.sql import Window as W
+
+    if not terms:
+        raise ValueError("bm25_score_terms: empty query term list")
+    return postings.filter(F.col("term").isin(*terms)).withColumn(
+        "df", F.count(F.lit(1)).over(W.partitionBy("term")).cast("bigint")
+    )
+
+
+def _rank(
+    rows: DataFrame,
+    n: Column,
+    avgdl: Column,
+    id_col: str,
+    top_k: Optional[int],
+) -> DataFrame:
+    """The shared scoring tail: per-(doc, term) contributions of
+    ``rows`` (``tf``, ``dl``, ``df``), exact-summed per document, then
+    optionally cut to the global top-k (``TakeOrderedAndProject`` —
+    per-partition top-k, ties on the id)."""
+    scored = rows.select(
+        id_col,
+        bm25_score_expr(F.col("tf"), F.col("dl"), F.col("df"), n, avgdl).alias("s6"),
+    )
+    out = scored.groupBy(id_col).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_terms_hit"),
+        (F.sum("s6").cast("double") / F.lit(1000000.0)).alias("score"),
+    )
+    if top_k is not None:
+        out = out.orderBy(F.col("score").desc(), id_col).limit(top_k)
+    return out.select(id_col, "n_terms_hit", "score")
+
+
 def bm25_score_terms(
     postings: DataFrame,
     doclens: DataFrame,
@@ -108,36 +148,14 @@ def bm25_score_terms(
     broadcast; the only corpus-proportional exchange is the join back
     to doclens.
     """
-    from pyspark.sql import Window as W
-
-    if not terms:
-        raise ValueError("bm25_score_terms: empty query term list")
-    hits = postings.filter(F.col("term").isin(*terms)).withColumn(
-        "df", F.count(F.lit(1)).over(W.partitionBy("term")).cast("bigint")
-    )
     stats = doclens.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         (
             F.sum("dl").cast("double") / F.count(F.lit(1)).cast("double")
         ).alias("avgdl"),
     )
-    scored = (
-        hits.join(doclens, id_col)
-        .crossJoin(F.broadcast(stats))
-        .select(
-            id_col,
-            bm25_score_expr(
-                F.col("tf"), F.col("dl"), F.col("df"), F.col("n"), F.col("avgdl")
-            ).alias("s6"),
-        )
-    )
-    out = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_terms_hit"),
-        (F.sum("s6").cast("double") / F.lit(1000000.0)).alias("score"),
-    )
-    if top_k is not None:
-        out = out.orderBy(F.col("score").desc(), id_col).limit(top_k)
-    return out.select(id_col, "n_terms_hit", "score")
+    rows = _term_hits(postings, terms).join(doclens, id_col).crossJoin(F.broadcast(stats))
+    return _rank(rows, F.col("n"), F.col("avgdl"), id_col, top_k)
 
 
 def build_bm25_index(
@@ -175,12 +193,33 @@ def query_bm25_index(
     id_col: str = "doc_id",
     top_k: Optional[int] = None,
 ) -> DataFrame:
-    """Probe the persisted index: the corpus is NEVER re-tokenized — the
-    term filter pushes down to the postings parquet, so the probe reads
-    ~|terms| postings lists + one doclens scan. Reads the LIVE view
-    (tombstoned docs excluded, statistics self-corrected)."""
-    postings, doclens = load_bm25_index(spark, path, id_col)
-    return bm25_score_terms(postings, doclens, terms, id_col, top_k)
+    """Probe the persisted index: the corpus is NEVER re-tokenized. Reads
+    the LIVE view (tombstoned docs excluded, statistics self-corrected).
+    The first probe of an index state reads the tables (the term filter
+    pushes down to the postings parquet: ~|terms| postings lists + one
+    doclens scan); from its second probe on, the state is resident
+    (``tombstones.resident_state``) and a probe filters the cached,
+    term-partitioned scoring table with N and avgdl as constants."""
+    state = tombstones.resident_state(
+        spark, _tables(path, id_col), lambda views: _scoring_state(views, id_col)
+    )
+    if state is None:
+        postings, doclens = load_bm25_index(spark, path, id_col)
+        return bm25_score_terms(postings, doclens, terms, id_col, top_k)
+    table, (n, avgdl) = state
+    return _rank(_term_hits(table, terms), F.lit(n), F.lit(avgdl), id_col, top_k)
+
+
+def _scoring_state(views: list, id_col: str) -> tuple:
+    """The resident state of one live ``(postings, doclens)`` view: the
+    scoring table ``postings ⋈ doclens`` partitioned by term, so the df
+    window over a probe's terms needs no exchange, and ``(N, avgdl)``
+    collected once. ``float(sum) / float(n)`` is the IEEE double
+    ``bm25_score_terms`` computes as ``cast(sum)/cast(count)``."""
+    postings, doclens = views
+    n, total = doclens.agg(F.count(F.lit(1)), F.sum("dl")).first()
+    avgdl = float(total) / float(n) if n else None
+    return postings.join(doclens, id_col).repartition("term"), (n, avgdl)
 
 
 def bm25_score_query_table(

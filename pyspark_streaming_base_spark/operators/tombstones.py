@@ -53,22 +53,33 @@ and, past an opt-in ``compact_ratio``, compacts (and says so);
 ``compact`` reads the live view without the ratio check, ``swap_in``s
 every live table and clears the tombstones; ``reset_for_build`` is the build prelude (``reset_live``
 every declared table, clear the tombstones).
+
+``resident_state`` is the one memo of derived per-state data (BM25's
+scoring table and corpus statistics): keyed by session, layout and the
+tables' snapshot dirs and file listings, admitted on a state's second
+probe, at most ``RESIDENT_STATES`` persisted tables, a replaced or
+evicted state unpersisted.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import shutil
+import threading
 import uuid
 import warnings
+from collections import OrderedDict
 from dataclasses import dataclass
-from typing import Callable, Optional, Sequence, Tuple
+from typing import Any, Callable, Optional, Sequence, Tuple
 
+from pyspark import StorageLevel
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from pyspark_streaming_base_spark.parquet import read_parquet
+from pyspark_streaming_base_spark.parquet import append_parquet, listing, read_parquet
 
 #: Tombstone-to-live row ratio at which probes warn and
 #: ``maybe_compact`` fires: past this, the anti-join side stops being
@@ -86,6 +97,10 @@ MAX_DRIVER_DELETE_BATCH = 100_000
 #: hooks make back-to-back swaps plausible: a reader that resolved the
 #: pointer just before TWO rapid flips must still find its snapshot.
 GENERATIONS_RETAINED = 2
+
+#: Most resident states held at once (see ``resident_state``): one per
+#: session and index, the least recently probed evicted first.
+RESIDENT_STATES = 8
 
 #: First line of a manifest pointer file — identifies the file as a
 #: generation pointer (vs any stray file at the live path).
@@ -127,13 +142,14 @@ def write_tombstones(
                 "ids stay distributed"
             )
         ids = spark.createDataFrame([(int(i),) for i in ids], f"{id_col} bigint")
-    ids.select(id_col).write.mode("append").parquet(tomb_path)
+    append_parquet(ids.select(id_col), tomb_path)
 
 
 def read_tombstones(spark: SparkSession, tomb_path: str) -> Optional[DataFrame]:
-    """The distinct tombstoned ids, or None when nothing was ever
-    deleted (the common fresh-index case — avoids planning a no-op
-    anti-join). ONLY the path-missing case maps to None: any other read
+    """The tombstoned ids, repeats possible (every consumer is a
+    left-anti join, which a repeated id does not change), or None when
+    nothing was ever deleted (the common fresh-index case — avoids
+    planning a no-op anti-join). ONLY the path-missing case maps to None: any other read
     failure (corrupt parquet, permissions, transient FS error)
     propagates, because treating it as "nothing deleted" would silently
     resurrect tombstoned docs — the wrong failure mode for a takedown
@@ -141,7 +157,7 @@ def read_tombstones(spark: SparkSession, tomb_path: str) -> Optional[DataFrame]:
     if not os.path.exists(tomb_path):
         return None
     try:
-        return read_parquet(spark, tomb_path).distinct()
+        return read_parquet(spark, tomb_path)
     except AnalysisException:
         # the dir vanished between the existence check and the read
         # (a racing clear_tombstones) — same meaning as path-missing.
@@ -253,6 +269,77 @@ def load_live_view(spark: SparkSession, tables: IndexTables) -> list:
     ``TombstoneCompactionNeeded`` once the tombstones reach
     ``COMPACT_RATIO`` of ``ratio_basis``."""
     return _open(spark, tables, tables.frozen, tables.ratio_basis)
+
+
+def _state_key(tables: IndexTables) -> tuple:
+    """What identifies an index state: every declared table's resolved
+    snapshot dir and file listing, and the tombstones' listing. A
+    delete, append, compaction swap or rebuild changes it."""
+    snaps = [snapshot_path(p) for p in (*tables.live, *tables.frozen)]
+    return tuple((s, listing(s)) for s in snaps), listing(tables.tombstones)
+
+
+@dataclass
+class _Resident:
+    key: tuple
+    table: Optional[DataFrame] = None
+    value: Any = None
+
+
+#: (session, tables) -> the state key last probed and, from that key's
+#: second probe on, its resident state; least recently probed first
+_resident: "OrderedDict[tuple, _Resident]" = OrderedDict()
+_resident_lock = threading.Lock()
+_serials = itertools.count()
+
+
+def _release(entry: _Resident) -> None:
+    table = entry.table
+    if table is not None and table.sparkSession.sparkContext._jsc is not None:
+        table.unpersist()
+
+
+def resident_state(
+    spark: SparkSession,
+    tables: IndexTables,
+    build: Callable[[list], Tuple[DataFrame, Any]],
+) -> Optional[Tuple[DataFrame, Any]]:
+    """The resident state of the index's current state, for probes that
+    would otherwise re-open and re-derive it on every call: ``(table,
+    value)`` from ``build(load_live_view(spark, tables))``, with
+    ``table`` persisted ``MEMORY_AND_DISK``. Keyed by the session, the
+    layout and ``_state_key``, so any write or a new session makes a new
+    state. Admission waits for a state's SECOND probe: the first gets
+    None and takes the plain path, so a state probed once (a fresh
+    build checked once) costs nothing extra. At most
+    ``RESIDENT_STATES`` states are held; a state replaced by a newer one
+    for the same index, or evicted, is unpersisted. A table dropped by
+    ``spark.catalog.clearCache()`` is persisted again. The compaction
+    ratio warning fires when a state is opened (its first two probes),
+    not on every warm probe."""
+    slot = (spark, tables)
+    key = _state_key(tables)
+    with _resident_lock:
+        entry = _resident.pop(slot, None)
+        if entry is not None and entry.key != key:
+            _release(entry)
+            entry = None
+        if entry is None:
+            entry = _Resident(key)
+        elif entry.table is None:
+            table, entry.value = build(load_live_view(spark, tables))
+            # Spark matches cache entries by plan, and two states of one
+            # index plan alike (same paths and schema, other files): a
+            # serial column keeps each state's cache entry its own
+            entry.table = table.withColumn(
+                "_resident_state", F.lit(next(_serials))
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+        elif not entry.table.storageLevel.useDisk:
+            entry.table.persist(StorageLevel.MEMORY_AND_DISK)
+        _resident[slot] = entry
+        while len(_resident) > RESIDENT_STATES:
+            _release(_resident.popitem(last=False)[1])
+        return None if entry.table is None else (entry.table, entry.value)
 
 
 def delete(
@@ -375,10 +462,7 @@ def append_live(df: DataFrame, live_path: str, partition_by=()) -> None:
     Single-writer maintenance contract: an append racing a
     compaction flip may land in the pre-flip generation — same as the
     family-wide contract that appends and compactions don't race."""
-    writer = df.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(snapshot_path(live_path))
+    append_parquet(df, snapshot_path(live_path), partition_by)
 
 
 def _generation_dirs(live_path: str) -> list:

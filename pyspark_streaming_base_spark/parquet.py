@@ -20,6 +20,11 @@ paths (the oldest inference goes first: generation directories and
 per-batch files are new paths every time). Several paths in one call
 are read inferred (there is no single table to key on).
 
+Appends keep the memo current: ``append_parquet`` moves a table's
+entry to its post-append listing when the appended schema is the one
+memoized, so an append-only table (index postings, tombstones) is
+inferred once, not once per append.
+
 TIMESTAMP(NANOS) columns: Spark 4 rejects them at inference
 (PARQUET_TYPE_ILLEGAL) unless ``spark.sql.legacy.parquet.nanosAsLong``
 is set, and then types them ``bigint`` (nanoseconds). The conf is set
@@ -32,10 +37,10 @@ from __future__ import annotations
 
 import os
 import threading
-from typing import Dict, Tuple
+from typing import Dict, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -49,7 +54,7 @@ _memo: Dict[str, Tuple[tuple, StructType]] = {}
 _lock = threading.Lock()
 
 
-def _listing(path: str) -> tuple:
+def listing(path: str) -> tuple:
     """(relative name, size, mtime_ns) of every file under ``path`` (or
     of ``path`` itself), sorted; empty when nothing local is there or a
     file vanished mid-listing (the read then infers, and reports a
@@ -93,16 +98,54 @@ def read_parquet(spark: SparkSession, path: str, *more: str) -> DataFrame:
     if more:
         return _infer(spark, path, *more)
     key = os.path.abspath(path)
-    listing = _listing(key)
+    files = listing(key)
     hit = _memo.get(key)
-    if listing and hit is not None and hit[0] == listing:
+    if files and hit is not None and hit[0] == files:
         return spark.read.schema(hit[1]).parquet(path)
     df = _infer(spark, path)
-    if listing:
+    if files:
         schema = df.schema
         with _lock:
             _memo.pop(key, None)
-            _memo[key] = (listing, schema)
+            _memo[key] = (files, schema)
             if len(_memo) > MEMO_PATHS:
                 del _memo[next(iter(_memo))]
     return df
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, array element and map value nullable —
+    the schema Spark's parquet writer stores, whatever the writer's
+    DataFrame declared."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(dt.keyType, _nullable(dt.valueType), True)
+    return dt
+
+
+def append_parquet(df: DataFrame, path: str, partition_by: Sequence[str] = ()) -> None:
+    """Parquet-append ``df`` to the table at ``path`` (hive-partitioned
+    by ``partition_by``) and carry its memo entry over to the new
+    listing when the entry described the table just before the write
+    and the appended schema, as stored, equals it. Otherwise the entry
+    is dropped and the next read infers."""
+    key = os.path.abspath(path)
+    before = listing(key)
+    writer = df.write.mode("append")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
+    # partition columns are stored in directory names, read back last
+    fields = [f for f in df.schema.fields if f.name not in partition_by]
+    fields += [df.schema[c] for c in partition_by]
+    stored = _nullable(StructType(fields))
+    after = listing(key)
+    with _lock:
+        hit = _memo.pop(key, None)
+        if hit is not None and hit[0] == before and hit[1] == stored:
+            _memo[key] = (after, hit[1])

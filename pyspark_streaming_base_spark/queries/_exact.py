@@ -59,11 +59,6 @@ def dsum(col: Column) -> Column:
     return unscale(F.sum(scaled(col)))
 
 
-def davg(col: Column) -> Column:
-    """Order-independent average: exact scaled-int sum / count, in double."""
-    return (dsum(col) / F.count(col)).alias("avg")
-
-
 def epoch_seconds(col: Column) -> Column:
     """Whole-second epoch (floor) of a timestamp, NTZ-safe.
 
@@ -88,11 +83,6 @@ def sql_dsum(expr: str) -> str:
         f"CAST(SUM(CAST(ROUND(({expr}) * {SCALE}.0, 0) AS BIGINT)) AS DOUBLE)"
         f" / {SCALE}.0"
     )
-
-
-def sql_davg(expr: str) -> str:
-    """DuckDB twin of :func:`davg`."""
-    return f"({sql_dsum(expr)}) / COUNT({expr})"
 
 
 def dround(col: Column, scale: int = 6) -> Column:

@@ -191,6 +191,32 @@ def test_append_at_same_path_is_read_in_full(spark, tmp_path):
     assert sorted(r.id for r in read_parquet(spark, path).collect()) == list(range(5))
 
 
+def test_append_keeps_the_memo_current(spark, tmp_path):
+    """An append of the memoized schema moves the entry to the new
+    listing: the next read launches no job and sees every row. The
+    appended frame's non-nullable ``id`` is stored nullable, as read."""
+    path = str(tmp_path / "t")
+    spark.range(2).write.parquet(path)
+    read_parquet(spark, path)
+    parquet.append_parquet(spark.range(2, 5), path)
+    df, read_jobs = _jobs(spark, lambda: read_parquet(spark, path))
+    assert read_jobs == 0
+    assert sorted(r.id for r in df.collect()) == list(range(5))
+
+
+def test_append_of_another_schema_drops_the_entry(spark, tmp_path):
+    """The next read infers again (which file's footer Spark infers from
+    is its choice, so only the rows are pinned)."""
+    path = str(tmp_path / "t")
+    spark.createDataFrame([(1, "a")], "k bigint, v string").write.parquet(path)
+    read_parquet(spark, path)
+    parquet.append_parquet(spark.createDataFrame([(2,)], "k bigint"), path)
+    assert os.path.abspath(path) not in parquet._memo
+    df, jobs = _jobs(spark, lambda: read_parquet(spark, path))
+    assert jobs == 1
+    assert sorted(r.k for r in df.collect()) == [1, 2]
+
+
 def test_missing_table_still_raises(spark, tmp_path):
     from pyspark.errors import AnalysisException
 
